@@ -1,13 +1,24 @@
 """Local stand-in for the driver's correctness gate: run every
 ``queries()`` entry on Spark and its ``oracle_sql()`` twin on DuckDB over
 the same parquet, compare row count, column names, and an
-order-insensitive value hash (columns sorted by name, rows sorted).
+order-insensitive value hash (columns sorted by name, rows sorted). The
+hash covers each column's dtype kind (integer, float, bool, string,
+datetime), so a twin that returns DOUBLE (or HUGEINT, which pandas holds
+as float) where the query returns BIGINT is red even when every value
+prints the same. Integer width is left out, as in the gate this mirrors:
+CORRECTNESS_r05.json passes an INTEGER-vs-BIGINT pair (o2_topn_per_group's
+row number) and fails an integer-vs-float one (a HUGEINT sum against a
+BIGINT one).
 
-Usage: python scripts/check_oracles.py [sf_dir] [only_query_name]
+Usage: python scripts/check_oracles.py [sf_dir ...] [query_name ...]
+
+Arguments that are directories are scale-factor dirs, the rest select
+queries. With no sf_dir the sweep runs sf0.001, then sf0.01.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -16,38 +27,31 @@ import pandas as pd
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+DEFAULT_SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
+def canon(df: pd.DataFrame) -> tuple[int, list[str], dict[str, str], str, str]:
+    """(rows, columns, dtype kinds, hash with dtypes, hash of values alone)."""
     cols = sorted(df.columns)
+    dtypes = {c: df[c].dtype.kind for c in cols}
     d = df[cols].copy()
     for c in cols:
-        if d[c].dtype == object:
-            d[c] = d[c].astype(str)
-        elif str(d[c].dtype).startswith("float"):
+        if str(d[c].dtype).startswith("float"):
             d[c] = d[c].map(lambda x: f"{x:.9g}")
         else:
             d[c] = d[c].astype(str)
-    if len(d) == 0:
-        rows = []
-    else:
-        rows = sorted(d.apply(lambda r: "\x01".join(r.values), axis=1).tolist())
-    import hashlib
-
-    h = hashlib.md5("\n".join(rows).encode()).hexdigest()
-    return len(df), cols, h
+    rows = sorted(d.apply(lambda r: "\x01".join(r.values), axis=1).tolist()) if len(d) else []
+    head = "\x01".join(f"{c}:{dtypes[c]}" for c in cols)
+    h = hashlib.md5("\n".join([head, *rows]).encode()).hexdigest()
+    hv = hashlib.md5("\n".join(rows).encode()).hexdigest()
+    return len(df), cols, dtypes, h, hv
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:]) or None
-
+def check_sf(spark, sf_dir: str, only: set[str] | None) -> int:
     import __spark_entry__ as e
-    from xdan_dqa_spark.session import get_spark
 
-    spark = get_spark("check_oracles", master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
@@ -74,24 +78,46 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error {type(ex).__name__}: {str(ex)[:200]}")
             failures += 1
             continue
-        sn, sc, sh = canon(spark_pdf)
-        dn, dc, dh = canon(duck_pdf)
+        sn, sc, sd, sh, sv = canon(spark_pdf)
+        dn, dc, dd, dh, dv = canon(duck_pdf)
         status = "OK  " if (sn, sc, sh) == (dn, dc, dh) else "FAIL"
         if status == "FAIL":
             failures += 1
         print(f"{status} {name}: spark({sn} rows, {sh[:10]}) duck({dn} rows, {dh[:10]}) cols={'=' if sc == dc else f'{sc} vs {dc}'}")
+        if status == "FAIL" and sc == dc:
+            diff = {c: f"{sd[c]} vs {dd[c]}" for c in sc if sd[c] != dd[c]}
+            if diff:
+                same = "values equal" if (sn, sv) == (dn, dv) else "values differ"
+                print(f"  dtypes (spark vs duck): {diff}; {same}")
         if status == "FAIL" and sn == dn and sc == dc:
             # show first differing row for debugging
-            a = spark_pdf[sorted(spark_pdf.columns)].sort_values(sorted(spark_pdf.columns)).reset_index(drop=True)
-            b = duck_pdf[sorted(duck_pdf.columns)].sort_values(sorted(duck_pdf.columns)).reset_index(drop=True)
+            a = spark_pdf[sc].sort_values(sc).reset_index(drop=True)
+            b = duck_pdf[sc].sort_values(sc).reset_index(drop=True)
             diff = (a.astype(str) != b.astype(str)).any(axis=1)
             if diff.any():
                 i = diff.idxmax()
                 print("  spark:", a.iloc[i].to_dict())
                 print("  duck :", b.iloc[i].to_dict())
+    return failures
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    sf_dirs = [a for a in args if os.path.isdir(a)] or DEFAULT_SF_DIRS
+    only = {a for a in args if not os.path.isdir(a)} or None
+
+    from xdan_dqa_spark.session import get_spark
+
+    spark = get_spark("check_oracles")
+    totals = {}
+    for sf_dir in sf_dirs:
+        print(f"== {sf_dir}")
+        totals[sf_dir] = check_sf(spark, sf_dir, only)
     spark.stop()
-    print(f"\n{failures} failures")
-    return 1 if failures else 0
+    print()
+    for sf_dir, n in totals.items():
+        print(f"{sf_dir}: {n} failures")
+    return 1 if any(totals.values()) else 0
 
 
 if __name__ == "__main__":

@@ -810,10 +810,9 @@ def term_adaptation(docs: DataFrame, text_col: str = "text",
         F.count("*").alias("df1"),
         F.sum(F.when(F.col("k") >= 2, 1).otherwise(0)).alias("df2"),
     )
-    w = Window.orderBy(F.desc("total_cnt"), F.asc("term"))
     return (
-        per_term.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= top_k)
+        per_term.orderBy(F.desc("total_cnt"), F.asc("term"))
+        .limit(top_k)
         .select(
             "term", "total_cnt", "df1", "df2",
             F.round(

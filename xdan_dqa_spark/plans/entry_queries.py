@@ -595,215 +595,6 @@ FROM documents
 QUALIFY rn <= 3
 """
 
-# Gap-based sessionization over events (operators/sessions.py): one
-# shuffle on user_id, lag → flag → running-sum windows, hash agg.
-# Timestamps compared as epoch-µs longs (session tz pinned UTC) so the
-# arithmetic is integral and engine-portable.
-
-def q_sessionize_events(spark, sf_dir):
-    from ..operators.sessions import sessionize
-
-    return sessionize(_t(spark, sf_dir, "events"), gap_sec=1800)
-
-
-SQL_SESSIONIZE = """
-WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
-m AS (
-  SELECT user_id, event_id, tus,
-         CASE WHEN lag(tus) OVER w IS NULL
-                OR tus - lag(tus) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)
-),
-s AS (
-  SELECT user_id, tus,
-         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY tus, event_id
-                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-  FROM m
-)
-SELECT user_id, session_seq, COUNT(*) AS n_events,
-       MIN(tus) AS start_us, MAX(tus) AS end_us,
-       CAST(MAX(tus) - MIN(tus) AS DOUBLE) / 1e6 AS duration_sec
-FROM s GROUP BY user_id, session_seq
-"""
-
-# As-of join (operators/asof.py): attach the most recent purchase at or
-# before each click, per user — union+window carry, ONE shuffle on the
-# key; twin is DuckDB's native ASOF LEFT JOIN. Nullable outputs are
-# coalesced to sentinels on BOTH sides (a nullable BIGINT round-trips
-# as float64-NaN in one engine and object-None in the other, which
-# would break the value hash, not the semantics).
-
-def q_asof_purchase_attach(spark, sf_dir):
-    from ..operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "tus", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "tus"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("tus"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    out = asof_join(
-        clicks, purchases,
-        key_col="user_id", time_col="tus",
-        value_cols=["purchase_id", "purchase_value"], tie_col="purchase_id",
-    )
-    return out.select(
-        "event_id", "user_id", "tus",
-        F.coalesce(F.col("purchase_id"), F.lit(-1)).alias("purchase_id"),
-        F.coalesce(F.col("purchase_value"), F.lit(0.0)).alias("purchase_value"),
-    )
-
-
-SQL_ASOF = """
-WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS tus, value, event_type FROM events),
-l AS (SELECT event_id, user_id, tus FROM ev WHERE event_type = 'click'),
-r0 AS (SELECT user_id, tus, event_id AS purchase_id, value AS purchase_value,
-              row_number() OVER (PARTITION BY user_id, tus ORDER BY event_id DESC) AS rn
-       FROM ev WHERE event_type = 'purchase'),
-r AS (SELECT user_id, tus, purchase_id, purchase_value FROM r0 WHERE rn = 1)
-SELECT l.event_id, l.user_id, l.tus,
-       COALESCE(r.purchase_id, -1) AS purchase_id,
-       COALESCE(r.purchase_value, 0.0) AS purchase_value
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.tus >= r.tus
-"""
-
-# Bucketed range join (operators/rangejoin.py): clicks falling inside
-# the 6-hour window after each error, per user. The naive inequality
-# join is a nested loop; bucketizing time makes it ONE equi-shuffle
-# (bucket + user key) plus an exact refine filter. Twin: DuckDB plain
-# BETWEEN join (fine at oracle scale).
-
-def q_range_join_error_windows(spark, sf_dir):
-    from ..operators.rangejoin import interval_join
-
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "tus", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id", "tus"
-    )
-    window_us = 21600 * 1_000_000
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"),
-        F.col("user_id"),
-        F.col("tus").alias("start_us"),
-        (F.col("tus") + F.lit(window_us)).alias("end_us"),
-    )
-    out = interval_join(
-        clicks, errors, time_col="tus", start_col="start_us",
-        end_col="end_us", bucket_width=window_us, by_cols=["user_id"],
-    )
-    return out.select(
-        "click_id", "user_id", "err_id",
-        ((F.col("tus") - F.col("start_us")).cast("double") / F.lit(1e6))
-        .alias("delay_sec"),
-    )
-
-
-SQL_RANGE_JOIN = """
-WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS tus, event_type FROM events),
-c AS (SELECT event_id AS click_id, user_id, tus FROM ev WHERE event_type = 'click'),
-e AS (SELECT event_id AS err_id, user_id, tus AS start_us,
-             tus + 21600000000 AS end_us
-      FROM ev WHERE event_type = 'error')
-SELECT c.click_id, c.user_id, e.err_id,
-       CAST(c.tus - e.start_us AS DOUBLE) / 1e6 AS delay_sec
-FROM c JOIN e ON c.user_id = e.user_id
-             AND c.tus BETWEEN e.start_us AND e.end_us
-"""
-
-# J3 star-schema dim join with EXPLICIT broadcast hints: region and
-# nation are bounded dims (25/5 rows at any scale), so both joins are
-# map-side BroadcastHashJoins — zero shuffle of the fact table.
-
-def q_j3_dim_broadcast(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region")
-    return (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.count("*").alias("n_customers"),
-            _dec_sum(F.col("c_acctbal"), "total_acctbal"),
-        )
-    )
-
-
-SQL_J3_DIM = """
-SELECT r_name, n_name, COUNT(*) AS n_customers,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(20,6))) AS DOUBLE) AS total_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
-"""
-
-# Rolling time-range aggregate: per-user trailing-1-hour mean of
-# `value` at each event — a RANGE-frame window (rangeBetween on
-# epoch-µs), the streaming-features primitive for rate/velocity
-# signals. One shuffle on the key; the frame is evaluated with a
-# sliding two-pointer pass inside each partition, never a self-join.
-# DECIMAL(20,6) sum discipline keeps the mean bit-identical in both
-# engines.
-
-def q_rolling_value_avg(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
-        "value",
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("tus")
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    vdec = F.col("value").cast("decimal(20,6)")
-    return ev.select(
-        "event_id", "user_id", "tus",
-        (F.sum(vdec).over(w).cast("double")
-         / F.count("*").over(w).cast("double")).alias("avg_value_1h"),
-    )
-
-
-SQL_ROLLING_AVG = """
-WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS tus, value FROM events)
-SELECT event_id, user_id, tus,
-       CAST(SUM(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE)
-       / CAST(COUNT(*) OVER w AS DOUBLE) AS avg_value_1h
-FROM ev
-WINDOW w AS (PARTITION BY user_id ORDER BY tus
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-# A7 per-user event-type pivot (Spark relational pivot with an EXPLICIT
-# value list — an inferred list would add a driver-side distinct scan
-# and make the output schema data-dependent)
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_a7_event_pivot(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .count()
-        .na.fill(0, _EVENT_TYPES)
-    )
-
-
-SQL_A7_PIVOT = "SELECT user_id, " + ", ".join(
-    f"CAST(SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS {t}"
-    for t in _EVENT_TYPES
-) + " FROM events GROUP BY user_id"
 
 # S3 deterministic sampling (reference src/data_loader.py:97-100, seed=42)
 
@@ -2211,34 +2002,6 @@ FROM (SELECT lang, n_chars,
 GROUP BY lang, tile
 """
 
-# U2 set-operation audience split: users who clicked but never purchased
-# (EXCEPT) vs users who did both (INTERSECT) — the retarget/holdout split.
-# Spark plans both as hash-aggregate + shuffle on user_id (distinct
-# semantics, same as SQL EXCEPT/INTERSECT); the two branches share the
-# deduped click set.
-
-def q_u2_set_ops(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id").distinct()
-    buys = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
-    click_only = clicks.subtract(buys).select(
-        F.lit("click_only").alias("segment"), "user_id"
-    )
-    both = clicks.intersect(buys).select(
-        F.lit("click_and_purchase").alias("segment"), "user_id"
-    )
-    return click_only.unionByName(both)
-
-
-SQL_U2_SET_OPS = """
-WITH c AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
-p AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-SELECT 'click_only' AS segment, user_id
-FROM (SELECT user_id FROM c EXCEPT SELECT user_id FROM p)
-UNION ALL
-SELECT 'click_and_purchase' AS segment, user_id
-FROM (SELECT user_id FROM c INTERSECT SELECT user_id FROM p)
-"""
 
 # Edit-distance near-dup refine (operators/dedup.py levenshtein_pairs):
 # LSH candidates verified by levenshtein on a fixed 200-char prefix —
@@ -2269,40 +2032,6 @@ WHERE CAST(levenshtein(pa.p, pb.p) AS DOUBLE)
       <= 0.4 * CAST(greatest(length(pa.p), length(pb.p)) AS DOUBLE)
 """
 
-# Two-step funnel (operators/sessions.py funnel_conversion): first click →
-# first purchase at-or-after it, per user. One shuffle; the running-min
-# window carries "earliest click so far" so no click×purchase self-join.
-
-def q_funnel_conversion(spark, sf_dir):
-    from ..operators.sessions import funnel_conversion
-
-    return funnel_conversion(_t(spark, sf_dir, "events"))
-
-
-SQL_FUNNEL = """
-WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events),
-w AS (
-  SELECT user_id, event_type, tus,
-         MIN(CASE WHEN event_type = 'click' THEN tus END) OVER
-           (PARTITION BY user_id ORDER BY tus, event_id
-            ROWS UNBOUNDED PRECEDING) AS a_seen
-  FROM ev
-),
-agg AS (
-  SELECT user_id,
-         MIN(CASE WHEN event_type = 'click' THEN tus END) AS fa,
-         MIN(CASE WHEN event_type = 'purchase' AND a_seen IS NOT NULL
-                       AND tus >= a_seen THEN tus END) AS fb
-  FROM w GROUP BY user_id
-)
-SELECT user_id,
-       COALESCE(fa, -1) AS first_a_us,
-       COALESCE(fb, -1) AS first_b_after_us,
-       CAST(fb IS NOT NULL AS INTEGER) AS converted,
-       CASE WHEN fb IS NOT NULL THEN CAST(fb - fa AS DOUBLE) / 1e6
-            ELSE 0.0 END AS delay_sec
-FROM agg
-"""
 
 # A11 per-language feature correlation (operators/metrics.py
 # feature_correlation): Pearson r of chars vs whitespace tokens from
@@ -2344,130 +2073,8 @@ SELECT lang, CAST(n AS BIGINT) AS n,
 FROM m
 """
 
-# P11 semi-structured props ingestion: per-type stats of a JSON-extracted
-# field — the open-schema sidecar pattern (absorb what you need, leave
-# the blob). get_json_object is a JVM-side path evaluator (no UDF);
-# exact DECIMAL(38,0) sum matches DuckDB's hugeint SUM.
-
-def q_p11_json_props(spark, sf_dir):
-    k = F.get_json_object(F.col("props"), "$.k").cast("bigint")
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.count(k).alias("n_with_k"),
-            F.coalesce(F.min(k), F.lit(-1)).alias("min_k"),
-            F.coalesce(F.max(k), F.lit(-1)).alias("max_k"),
-            F.coalesce(F.sum(k.cast("decimal(38,0)")).cast("long"), F.lit(0)).alias("sum_k"),
-        )
-    )
-
-
-SQL_P11_JSON = """
-SELECT event_type, COUNT(*) AS n_events,
-       COUNT(CAST(props->>'$.k' AS BIGINT)) AS n_with_k,
-       COALESCE(MIN(CAST(props->>'$.k' AS BIGINT)), -1) AS min_k,
-       COALESCE(MAX(CAST(props->>'$.k' AS BIGINT)), -1) AS max_k,
-       COALESCE(CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT), 0) AS sum_k
-FROM events GROUP BY event_type
-"""
-
 
 # ------------------------------------------------------------- round-5 batch 3
-# J4 full-outer reconcile audit: customer ↔ orders discrepancy report —
-# the data-quality join (which keys exist on only one side, and how much
-# value rides on them). Orders are pre-aggregated to the custkey grain
-# BEFORE the full-outer join, so the join's shuffle carries one bounded
-# row per key per side (skew-resistant) instead of every order row; the
-# classification then folds to three bounded audit rows.
-
-def q_j4_reconcile(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    ord_agg = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("_n_orders"),
-             _dec_sum(F.col("o_totalprice"), "_value"))
-    )
-    joined = cust.join(ord_agg, cust.c_custkey == ord_agg.o_custkey, "full_outer")
-    segment = (
-        F.when(F.col("c_custkey").isNull(), "order_only")
-        .when(F.col("o_custkey").isNull(), "customer_only")
-        .otherwise("both")
-    )
-    return joined.groupBy(segment.alias("segment")).agg(
-        F.count("*").alias("n_keys"),
-        F.coalesce(F.sum("_n_orders"), F.lit(0)).alias("n_orders"),
-        F.coalesce(
-            F.sum(F.col("_value").cast("decimal(38,6)")).cast("double"), F.lit(0.0)
-        ).alias("order_value"),
-    )
-
-
-SQL_J4_RECONCILE = """
-WITH oa AS (
-  SELECT o_custkey, COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(20,6))) AS DOUBLE) AS value
-  FROM orders GROUP BY o_custkey
-)
-SELECT CASE WHEN c.c_custkey IS NULL THEN 'order_only'
-            WHEN oa.o_custkey IS NULL THEN 'customer_only'
-            ELSE 'both' END AS segment,
-       COUNT(*) AS n_keys,
-       COALESCE(SUM(n_orders), 0) AS n_orders,
-       COALESCE(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 0.0) AS order_value
-FROM customer c FULL OUTER JOIN oa ON c.c_custkey = oa.o_custkey
-GROUP BY 1
-"""
-
-# A12 multi-distinct audit: per event type, exact distinct users and
-# distinct active days in ONE statement. Spark plans multiple COUNT
-# DISTINCTs via the Expand operator (one input row fans to one row per
-# distinct spec, each partially aggregated map-side) — still a single
-# shuffle, no per-group value buffering, vs approx_count_distinct which
-# could never be oracle-paired bit-for-bit. Day index is integral
-# epoch-µs arithmetic (no calendar semantics to disagree cross-engine).
-
-def q_a12_distinct_exact(spark, sf_dir):
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    return (
-        _t(spark, sf_dir, "events")
-        .select("event_type", "user_id", day.alias("_day"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.countDistinct("_day").alias("n_days"),
-        )
-    )
-
-
-SQL_A12_DISTINCT = """
-SELECT event_type, COUNT(*) AS n_events,
-       COUNT(DISTINCT user_id) AS n_users,
-       COUNT(DISTINCT epoch_us(ts) // 86400000000) AS n_days
-FROM events GROUP BY event_type
-"""
-
-# Weekly retention cohorts (operators/sessions.py cohort_retention):
-# first-activity week × return-week offset, distinct users per cell.
-
-def q_cohort_retention(spark, sf_dir):
-    from ..operators.sessions import cohort_retention
-
-    return cohort_retention(_t(spark, sf_dir, "events"))
-
-
-SQL_COHORT_RETENTION = """
-WITH uw AS (
-  SELECT DISTINCT user_id AS u, epoch_us(ts) // 604800000000 AS week
-  FROM events
-),
-c AS (SELECT u, week, MIN(week) OVER (PARTITION BY u) AS cohort_week FROM uw)
-SELECT cohort_week, week - cohort_week AS week_offset, COUNT(*) AS n_users
-FROM c GROUP BY cohort_week, week - cohort_week
-"""
 
 # Boilerplate shingle prevalence (operators/textstats.py
 # shingle_prevalence): fraction of each doc's distinct 3-gram shingles
@@ -2578,8 +2185,6 @@ SELECT source, n_docs, CAST(chars AS DOUBLE) AS total_chars,
        CAST(RANK() OVER (ORDER BY chars DESC, source) AS BIGINT) AS rank
 FROM a
 """
-
-
 
 
 # ------------------------------------------------------------- round-5 batch 4
@@ -2705,8 +2310,6 @@ SELECT doc_id, lang, n_chars, round(z, 9) AS z FROM zz WHERE abs(z) > 2.0
 """
 
 
-
-
 # ------------------------------------------------------------- round-5 batch 5
 # Near-dup cluster-size census: how much of the corpus sits in clusters
 # of 1, 2, 3... — the corpus-health headline behind any dedup rollout
@@ -2740,105 +2343,6 @@ def q_cc_cluster_histogram(spark, sf_dir):
         .agg(F.count("*").alias("n_clusters"),
              F.sum("cluster_size").cast("long").alias("n_docs"))
     )
-
-
-# A16 gap-filled daily series: per event type, one row per calendar day
-# between that type's first and last activity, zero-filled — the report
-# shape monitoring dashboards need (a missing day must show AS a zero,
-# not vanish). Days are integral epoch-µs arithmetic. The sequence()
-# explode runs over the BOUNDED (type × span) table — span is calendar
-# time, never row count — and the left join back is keyed on the same
-# bounded grain.
-
-def q_a16_daily_gapfill(spark, sf_dir):
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    agg = (
-        _t(spark, sf_dir, "events")
-        .select("event_type", day.alias("day"), "value")
-        .groupBy("event_type", "day")
-        .agg(F.count("*").alias("n_events"), _dec_sum(F.col("value"), "_v"))
-    )
-    span = agg.groupBy("event_type").agg(F.min("day").alias("_d0"),
-                                         F.max("day").alias("_d1"))
-    grid = span.select(
-        "event_type", F.explode(F.sequence("_d0", "_d1")).alias("day")
-    )
-    return grid.join(agg, ["event_type", "day"], "left").select(
-        "event_type", "day",
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        F.coalesce("_v", F.lit(0.0)).alias("total_value"),
-    )
-
-
-SQL_A16_GAPFILL = """
-WITH e AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day, value FROM events),
-a AS (
-  SELECT event_type, day, COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS v
-  FROM e GROUP BY event_type, day
-),
-s AS (SELECT event_type, MIN(day) AS d0, MAX(day) AS d1 FROM a GROUP BY event_type),
-g AS (SELECT event_type, unnest(generate_series(d0, d1)) AS day FROM s)
-SELECT g.event_type, g.day, COALESCE(n, 0) AS n_events,
-       COALESCE(v, 0.0) AS total_value
-FROM g LEFT JOIN a ON g.event_type = a.event_type AND g.day = a.day
-"""
-
-# A17 per-user activity percentile (bot/power-user triage). A naive
-# percent_rank() is an UNPARTITIONED window over one row per user — a
-# single-task sort at 10⁹ users. Same values, scale-safe shape: the
-# cumulative "how many users are less active" count runs over the BOUNDED
-# activity-count histogram (distinct n_events values ≤ max activity,
-# never user-scaled), broadcast back onto the user table — the user table
-# itself never total-orders. percent_rank ≡ (#smaller)/(N-1) with ties
-# sharing the value, exactly the window function's definition.
-
-def q_a17_user_percentile(spark, sf_dir):
-    cnts = (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"))
-    )
-    hist = cnts.groupBy("n_events").agg(F.count("*").alias("_c"))
-    w = (
-        Window.partitionBy().orderBy("n_events")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = hist.select(
-        "n_events",
-        F.coalesce(F.sum("_c").over(w), F.lit(0)).alias("_smaller"),
-    )
-    total = cnts.agg(F.count("*").alias("_N"))
-    out = (
-        cnts.join(F.broadcast(cum), "n_events")
-        .crossJoin(F.broadcast(total))
-    )
-    pr = F.when(
-        F.col("_N") > 1,
-        F.col("_smaller").cast("double") / (F.col("_N") - 1).cast("double"),
-    ).otherwise(F.lit(0.0))
-    tier = (
-        F.when(pr >= 0.9, "heavy").when(pr >= 0.5, "normal").otherwise("light")
-    )
-    return out.select(
-        "user_id", "n_events",
-        F.round(pr, 9).alias("pct_rank"), tier.alias("tier"),
-    )
-
-
-SQL_A17_PERCENTILE = """
-WITH c AS (SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id),
-p AS (SELECT user_id, n_events,
-             percent_rank() OVER (ORDER BY n_events) AS pr
-      FROM c)
-SELECT user_id, n_events, round(pr, 9) AS pct_rank,
-       CASE WHEN pr >= 0.9 THEN 'heavy'
-            WHEN pr >= 0.5 THEN 'normal'
-            ELSE 'light' END AS tier
-FROM p
-"""
-
-
 
 
 # Gopher/C4 heuristic signals over REAL text, directly oracle-paired —
@@ -2908,8 +2412,6 @@ FROM ln
 """
 
 
-
-
 # ------------------------------------------------------------- round-5 batch 6
 # A18 robust center/spread: per-language median + MAD of doc length
 # (operators/textstats.py median_abs_deviation — two exact-histogram
@@ -2935,65 +2437,6 @@ SELECT lang,
 FROM documents GROUP BY lang
 """
 
-# A19 event co-occurrence lift (market-basket over user sessions): for
-# each event-type pair, how much more often do the two co-occur in one
-# user's history than independence predicts. The self-join is keyed on
-# user_id with each side pre-deduped to the (user, type) grain — per-user
-# type sets are bounded by the type ENUM, so join output is linear in
-# users × C(T,2), never event-count-squared. Totals and per-type counts
-# ride broadcast joins (≤#types rows).
-
-def q_a19_event_lift(spark, sf_dir):
-    ut = (
-        _t(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-    )
-    n_users = ut.select("user_id").distinct().agg(
-        F.count("*").alias("_n")
-    )
-    per_type = ut.groupBy("event_type").agg(F.count("*").alias("n_t"))
-    a = ut.select("user_id", F.col("event_type").alias("type_a"))
-    b = ut.select("user_id", F.col("event_type").alias("type_b"))
-    pairs = (
-        a.join(b, "user_id")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count("*").alias("n_ab"))
-    )
-    na = per_type.select(F.col("event_type").alias("type_a"),
-                         F.col("n_t").alias("n_a"))
-    nb = per_type.select(F.col("event_type").alias("type_b"),
-                         F.col("n_t").alias("n_b"))
-    nd = F.col("_n").cast("double")
-    lift = (F.col("n_ab").cast("double") / nd) / (
-        (F.col("n_a").cast("double") / nd) * (F.col("n_b").cast("double") / nd)
-    )
-    return (
-        pairs.join(F.broadcast(na), "type_a")
-        .join(F.broadcast(nb), "type_b")
-        .crossJoin(F.broadcast(n_users))
-        .select("type_a", "type_b", "n_ab", "n_a", "n_b",
-                F.round(lift, 9).alias("lift"))
-    )
-
-
-SQL_A19_LIFT = """
-WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-n AS (SELECT CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS nd FROM ut),
-t AS (SELECT event_type, COUNT(*) AS n_t FROM ut GROUP BY event_type),
-p AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b, COUNT(*) AS n_ab
-  FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT type_a, type_b, n_ab, ta.n_t AS n_a, tb.n_t AS n_b,
-       round((CAST(n_ab AS DOUBLE) / nd)
-             / ((CAST(ta.n_t AS DOUBLE) / nd) * (CAST(tb.n_t AS DOUBLE) / nd)),
-             9) AS lift
-FROM p JOIN t ta ON p.type_a = ta.event_type
-       JOIN t tb ON p.type_b = tb.event_type, n
-"""
 
 # A20 doc-length magnitude histogram: per (lang, power-of-two bucket)
 # counts. The bucket index is length(bin(n_chars)) = floor(log2)+1 —
@@ -3216,8 +2659,7 @@ WHERE (CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
 # ------------------------------------------------------------- round-5 batch 8
 # Within-doc repetition, join-based stopword coverage (the one Gopher
 # signal the regex form could not oracle-pair), token entropy,
-# quantile-band length filtering, canonical-form dedup, and rolling-
-# window burst detection over events.
+# quantile-band length filtering, and canonical-form dedup.
 
 
 def q_ngram_repetition(spark, sf_dir):
@@ -3317,27 +2759,6 @@ SELECT k.doc_id, k.lang, k.source, k.n_chars FROM k JOIN r USING (_k, doc_id)
 """
 
 
-def q_burst_users(spark, sf_dir):
-    from ..operators.sessions import burst_users
-
-    return burst_users(_t(spark, sf_dir, "events"),
-                       window_sec=86400, min_events=8)
-
-
-SQL_BURST_USERS = """
-WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-w AS (
-  SELECT user_id,
-         COUNT(*) OVER (PARTITION BY user_id ORDER BY tus
-                        RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
-           AS c
-  FROM e
-)
-SELECT user_id, COUNT(*) AS n_events, MAX(c) AS max_burst
-FROM w GROUP BY user_id HAVING MAX(c) >= 8
-"""
-
-
 def q_a21_length_band(spark, sf_dir):
     # Per-language [p05, p95] doc-length keep band (outlier trim before
     # mixing): the ≤#langs quantile table comes from the bounded-state
@@ -3378,8 +2799,7 @@ WHERE CAST(d.n_chars AS DOUBLE) >= lo AND CAST(d.n_chars AS DOUBLE) <= hi
 # Pipeline-health reports composed from the already-verified signal
 # machinery: language-confusion matrix (declared vs heuristic label),
 # per-source PII prevalence by rule, score-calibration deciles over the
-# full score_core tree, JSON-schema key census, and embedding-norm
-# profiles per label.
+# full score_core tree, and embedding-norm profiles per label.
 
 
 def q_lang_confusion(spark, sf_dir):
@@ -3488,28 +2908,6 @@ def _calibration_curve_sql() -> str:
     )
 
 
-def q_props_key_census(spark, sf_dir):
-    # JSON-schema drift census: which keys appear in the open `props`
-    # sidecar, per event type. json_object_keys is a JVM-side evaluator
-    # (no UDF); invalid/NULL JSON yields NULL and explode drops it.
-    ex = (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.explode(F.expr("json_object_keys(props)")).alias("key"),
-        )
-    )
-    return ex.groupBy("event_type", "key").agg(F.count("*").alias("n_events"))
-
-
-SQL_PROPS_KEY_CENSUS = """
-WITH ex AS (
-  SELECT event_type, unnest(json_keys(props)) AS key FROM events
-)
-SELECT event_type, key, COUNT(*) AS n_events FROM ex GROUP BY 1, 2
-"""
-
-
 def q_emb_norm_stats(spark, sf_dir):
     # Per-label embedding L2-norm profile (broken-encoder detection: a
     # batch of zero/exploded vectors shifts its label's norm band).
@@ -3553,95 +2951,6 @@ FROM n GROUP BY label
 
 
 # ------------------------------------------------------------ round-5 batch 10
-# Classic warehouse shapes over the TPC-H-ish tables (three-way
-# shipping-priority join, EXISTS-style late-shipment census) and the
-# cross-source near-dup contamination matrix composed from the verified
-# LSH pair machinery.
-
-
-def q_o3_shipping_priority(spark, sf_dir):
-    # TPC-H Q3 shape: segment-filtered customer ⋈ orders ⋈ lineitem,
-    # top-10 open orders by discounted revenue. Both date filters reach
-    # the scans (pushdown); the joins shuffle on their keys and AQE picks
-    # broadcast for whichever side dwarfs — neither is forced, because at
-    # 100 TB the customer side is NOT broadcastable. Revenue terms ride
-    # the DECIMAL(20,6) cast-sum discipline (order-free, matches DuckDB's
-    # cast rounding bit-for-bit, see a5/j4). Timestamps are emitted as
-    # integral epoch-µs so the value hash is tz/format-free.
-    cutoff = F.lit("1998-01-01").cast("timestamp")
-    c = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff).select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff).select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey",
-                 F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-                 .alias("order_date_us"),
-                 "o_orderpriority")
-        .agg(_dec_sum(rev, "revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-    )
-
-
-SQL_O3_SHIPPING = """
-SELECT l.l_orderkey, epoch_us(o.o_orderdate) AS order_date_us,
-       o.o_orderpriority,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01'
-  AND l.l_shipdate > TIMESTAMP '1998-01-01'
-GROUP BY 1, 2, 3
-ORDER BY revenue DESC, l.l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_a22_late_ship_priority(spark, sf_dir):
-    # TPC-H Q4 shape: per order priority, how many orders had at least
-    # one line item shipped more than 90 days after the order date — the
-    # EXISTS pattern as a LEFT SEMI join (one shuffle on orderkey, the
-    # lineitem side folds to distinct matching keys map-side; no
-    # count-distinct state, no row explosion on multi-line orders).
-    # Timestamp + interval arithmetic is integral µs in both engines.
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (o.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 90 DAYS")),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(F.count("*").alias("n_orders"))
-
-
-SQL_A22_LATE_SHIP = """
-SELECT o_orderpriority, COUNT(*) AS n_orders
-FROM orders o
-WHERE EXISTS (
-  SELECT 1 FROM lineitem l
-  WHERE l.l_orderkey = o.o_orderkey
-    AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-)
-GROUP BY o_orderpriority
-"""
-
 
 def q_dup_cross_source(spark, sf_dir):
     # Cross-source contamination matrix: verified near-dup pairs
@@ -3682,200 +2991,6 @@ GROUP BY 1, 2
 
 
 # ------------------------------------------------------------ round-5 batch 11
-# Remaining classic warehouse join shapes (TPC-H Q5 six-way regional
-# volume, Q14 promo share, Q19 disjunctive pushdown) plus three event/
-# document sequence reports (min_by/max_by endpoints, lag-based
-# transition matrix, integer-exact per-language deciles).
-
-
-def q_o4_regional_volume(spark, sf_dir):
-    # TPC-H Q5 shape: customer ⋈ orders ⋈ lineitem ⋈ supplier ⋈ nation
-    # ⋈ region with the "local supplier" constraint s_nationkey ==
-    # c_nationkey, revenue per nation for one region. nation/region are
-    # tiny and broadcast for free; customer/orders/lineitem shuffle on
-    # their join keys, and the region filter prunes the nation (and
-    # therefore supplier) side BEFORE the big joins — at 100 TB that
-    # predicate transitively removes ~4/5 of the probe side. DECIMAL
-    # cast-sum keeps the revenue order-free and DuckDB-bit-identical.
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AFRICA")
-    nr = F.broadcast(
-        n.join(r, n.n_regionkey == r.r_regionkey).select("n_nationkey", "n_name")
-    )
-    sn = s.join(nr, s.s_nationkey == nr.n_nationkey).select(
-        "s_suppkey", "s_nationkey", "n_name"
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(sn, (li.l_suppkey == sn.s_suppkey)
-                  & (c.c_nationkey == sn.s_nationkey))
-        .groupBy("n_name")
-        .agg(_dec_sum(rev, "revenue"))
-    )
-
-
-SQL_O4_REGIONAL_VOLUME = """
-SELECT n.n_name,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM customer c
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-JOIN region r ON r.r_regionkey = n.n_regionkey
-WHERE r.r_name = 'AFRICA'
-GROUP BY 1
-"""
-
-
-def q_a23_promo_share(spark, sf_dir):
-    # TPC-H Q14 shape: what fraction of revenue comes from PROMO parts.
-    # The part side carries only (p_partkey, p_type) — column pruning
-    # reaches the scan — and both the conditional and total revenue ride
-    # ONE aggregate over the joined fact (no second pass). The final
-    # ratio is a single row; rounded at 6dp so the double division
-    # hashes identically across engines.
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_extendedprice", "l_discount"
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .agg(_dec_sum(promo, "_promo"), _dec_sum(rev, "_total"))
-        .select(
-            F.round(F.col("_promo") / F.col("_total"), 6).alias("promo_share")
-        )
-    )
-
-
-SQL_A23_PROMO_SHARE = """
-SELECT round(
-  CAST(SUM(CAST(CASE WHEN p.p_type = 'PROMO'
-                     THEN l.l_extendedprice * (1.0 - l.l_discount)
-                     ELSE 0 END AS DECIMAL(20,6))) AS DOUBLE)
-  / CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                  AS DECIMAL(20,6))) AS DOUBLE), 6) AS promo_share
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-"""
-
-
-def q_f3_disjunctive_parts(spark, sf_dir):
-    # TPC-H Q19 shape: OR-of-ANDs over (brand, size, quantity). The
-    # brand/size conjuncts involve only part columns and the quantity
-    # ones only lineitem columns, so Catalyst derives the per-side
-    # residual filters (brand IN (...), quantity BETWEEN 1 AND 50) and
-    # pushes them below the join — .explain shows PushedFilters on both
-    # scans. At 100 TB that turns a join-then-filter into two pruned
-    # scans joined on a ~3-brand part slice.
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    j = li.join(p, li.l_partkey == p.p_partkey)
-    q, b, sz = F.col("l_quantity"), F.col("p_brand"), F.col("p_size")
-    cond = (
-        ((b == "Brand#1") & sz.between(1, 10) & q.between(1, 20))
-        | ((b == "Brand#2") & sz.between(11, 25) & q.between(10, 40))
-        | ((b == "Brand#3") & sz.between(26, 50) & q.between(20, 50))
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return j.filter(cond).agg(
-        _dec_sum(rev, "revenue"), F.count("*").alias("n_lines")
-    )
-
-
-SQL_F3_DISJUNCTIVE = """
-SELECT CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n_lines
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 10
-       AND l.l_quantity BETWEEN 1 AND 20)
-   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 11 AND 25
-       AND l.l_quantity BETWEEN 10 AND 40)
-   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 26 AND 50
-       AND l.l_quantity BETWEEN 20 AND 50)
-"""
-
-
-def q_a24_first_last_event(spark, sf_dir):
-    # Per-user session endpoints via min_by/max_by — ONE map-side-
-    # combinable aggregate instead of the row_number-over-window +
-    # filter double shuffle. Determinism: the selection key is the
-    # zero-padded '%020d|%020d' string over (epoch-µs, event_id);
-    # event_id is unique, so lexicographic == numeric order and ties
-    # cannot occur. DuckDB's arg_min/arg_max use the identical key
-    # (its arg_min rejects struct keys, hence the string encoding).
-    ev = _t(spark, sf_dir, "events")
-    key = F.format_string(
-        "%020d|%020d", F.unix_micros(F.col("ts").cast("timestamp")),
-        F.col("event_id"),
-    )
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return ev.groupBy("user_id").agg(
-        F.min_by("event_type", key).alias("first_type"),
-        F.max_by("event_type", key).alias("last_type"),
-        F.min(us).alias("first_ts_us"),
-        F.max(us).alias("last_ts_us"),
-        F.count("*").alias("n_events"),
-    )
-
-
-SQL_A24_FIRST_LAST = """
-SELECT user_id,
-       arg_min(event_type, printf('%020d|%020d', epoch_us(ts), event_id))
-         AS first_type,
-       arg_max(event_type, printf('%020d|%020d', epoch_us(ts), event_id))
-         AS last_type,
-       MIN(epoch_us(ts)) AS first_ts_us,
-       MAX(epoch_us(ts)) AS last_ts_us,
-       COUNT(*) AS n_events
-FROM events GROUP BY user_id
-"""
-
-
-def q_a25_event_transitions(spark, sf_dir):
-    # First-order Markov transition matrix over per-user event streams:
-    # lag(event_type) over (user_id, ts, event_id) then a count per
-    # (prev, cur) pair. One shuffle partitions by user_id for the
-    # window (users are independent, so the window state is bounded by
-    # the largest single user, not the table), and the 5×5 matrix
-    # aggregate is map-side combined. The ordering key includes
-    # event_id so same-µs ties are deterministic.
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.select(
-            "user_id", "event_type",
-            F.lag("event_type").over(w).alias("prev_type"),
-        )
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-SQL_A25_TRANSITIONS = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type
-  FROM events)
-SELECT prev_type, event_type, COUNT(*) AS n
-FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2
-"""
-
 
 def q_a26_lang_deciles(spark, sf_dir):
     # Per-language length-decile census: row_number over (n_chars,
@@ -3952,207 +3067,14 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
-def q_o5_returned_revenue(spark, sf_dir):
-    # TPC-H Q10 shape: top-20 customers by revenue lost to RETURNED items
-    # in one quarter — c ⋈ o ⋈ l ⋈ n with both filters (order-date window,
-    # returnflag) pushed to their scans. nation (bounded dim) is
-    # explicitly broadcast; the customer join shuffles on its key and AQE
-    # may broadcast the quarter-filtered order side — neither fact side
-    # is forced. Revenue rides the DECIMAL(20,6) cast-sum; the date is
-    # epoch-µs so the hash is tz-free.
-    lo = F.lit("1997-01-01").cast("timestamp")
-    hi = F.lit("1997-04-01").cast("timestamp")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi)
-    ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal", "c_nationkey"
-    )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(_dec_sum(rev, "revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-SQL_O5_RETURNED_REVENUE = """
-SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o.o_orderdate <  TIMESTAMP '1997-04-01'
-GROUP BY 1, 2, 3, 4
-ORDER BY revenue DESC, c.c_custkey ASC
-LIMIT 20
-"""
-
-
-def q_a27_linestatus_priority(spark, sf_dir):
-    # TPC-H Q12 shape: per line status, how many LATE-shipped lines
-    # (shipped > 60 days after order) belong to high- vs low-priority
-    # orders — the dual conditional aggregate rides ONE join + ONE
-    # map-side-combined fold; the lateness predicate lives in integral-µs
-    # interval arithmetic identical in both engines. (The canonical Q12
-    # groups by l_shipmode; this corpus carries no shipmode column, so
-    # l_linestatus stands in — the join/conditional-agg shape is the
-    # point.)
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linestatus", "l_shipdate"
-    )
-    late = (
-        F.unix_micros(F.col("l_shipdate").cast("timestamp"))
-        - F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-        > F.lit(60 * 86400 * 1_000_000)
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .filter(late)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_priority_late"),
-            F.sum(F.when(high, 0).otherwise(1)).alias("low_priority_late"),
-        )
-    )
-
-
-SQL_A27_LINESTATUS_PRIORITY = """
-SELECT l.l_linestatus,
-       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_priority_late,
-       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 0 ELSE 1 END) AS BIGINT) AS low_priority_late
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE epoch_us(l.l_shipdate) - epoch_us(o.o_orderdate)
-      > CAST(60 AS BIGINT) * 86400 * 1000000
-GROUP BY 1
-"""
-
-
-def q_o6_large_orders(spark, sf_dir):
-    # TPC-H Q18 shape: orders whose TOTAL line-item quantity exceeds a
-    # threshold, with their customer — groupBy(orderkey) + HAVING first,
-    # so the expensive joins see only the tiny qualifying set (AQE
-    # broadcasts it against orders/customer at any scale; the raw
-    # lineitem table never joins unaggregated). Quantity sums ride
-    # DECIMAL(20,6).
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(_dec_sum(F.col("l_quantity"), "total_qty"))
-        .filter(F.col("total_qty") > 220.0)
-    )
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            F.col("o_orderkey").alias("orderkey"),
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("order_date_us"),
-            "o_totalprice",
-            "total_qty",
-        )
-    )
-
-
-SQL_O6_LARGE_ORDERS = """
-WITH big AS (
-  SELECT l_orderkey,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(20,6))) AS DOUBLE) AS total_qty
-  FROM lineitem GROUP BY 1 HAVING total_qty > 220.0)
-SELECT c.c_custkey, c.c_name, o.o_orderkey AS orderkey,
-       epoch_us(o.o_orderdate) AS order_date_us, o.o_totalprice, b.total_qty
-FROM big b
-JOIN orders o ON b.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-"""
-
-
-def q_a29_nation_flows(spark, sf_dir):
-    # TPC-H Q7 shape: cross-nation trade flows — revenue shipped per
-    # (supplier nation → customer nation, year) for nation pairs that
-    # DIFFER. The two nation dims are bounded and explicitly broadcast
-    # (two BroadcastHashJoins); the inequality filter runs after the
-    # broadcast attach, map-side, never as a join condition blow-up. The
-    # fact joins shuffle on their keys; year extraction is integral in
-    # both engines.
-    lo = F.lit("1999-01-01").cast("timestamp")
-    hi = F.lit("2001-01-01").cast("timestamp")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi)
-    ).select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation")
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year"))
-        .agg(_dec_sum(rev, "revenue"))
-    )
-
-
-SQL_A29_NATION_FLOWS = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(date_part('year', l.l_shipdate) AS INT) AS ship_year,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-WHERE l.l_shipdate >= TIMESTAMP '1999-01-01'
-  AND l.l_shipdate <  TIMESTAMP '2001-01-01'
-  AND n1.n_name <> n2.n_name
-GROUP BY 1, 2, 3
-"""
-
-
 def q_a28_vocab_census(spark, sf_dir):
     # Corpus-grain vocabulary census per source (Heaps'-law probe): total
     # tokens, DISTINCT terms, and tokens-per-type. lexical_diversity is
     # the per-DOC type/token signal; this is the corpus-level one that
     # says whether a source's vocabulary is still growing (healthy prose)
     # or saturated (template spam). EXACT distinct via Spark's Expand
-    # planning (one shuffle, map-side partials — same machinery as
-    # a12_distinct_exact), never approx; the tokens-per-type ratio is one
-    # exact integer division rounded at 6 dp.
+    # planning (one shuffle, map-side partials), never approx; the
+    # tokens-per-type ratio is one exact integer division rounded at 6 dp.
     from ..functions.tokenize import WS_PLUS
 
     d = _t(spark, sf_dir, "documents")
@@ -4256,49 +3178,6 @@ SELECT w.doc_id,
        coalesce(a.n_tokens_kept, 0) AS n_tokens_kept,
        coalesce(a.text_scrubbed, '') AS text_scrubbed
 FROM words w LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def q_o7_top_supplier(spark, sf_dir):
-    # TPC-H Q15 shape: the supplier(s) with MAX revenue in a quarter —
-    # the correlated scalar-subquery form re-expressed as an
-    # unpartitioned window max over the ALREADY-AGGREGATED supplier-grain
-    # table (bounded by #suppliers, never the fact table), so the single
-    # window task is O(#suppliers). Ties all surface (Q15 semantics).
-    lo = F.lit("1999-01-01").cast("timestamp")
-    hi = F.lit("1999-04-01").cast("timestamp")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi)
-    ).select("l_suppkey", "l_extendedprice", "l_discount")
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(_dec_sum(
-            F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-            "total_rev",
-        ))
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    w = Window.partitionBy()
-    return (
-        rev.withColumn("_mx", F.max("total_rev").over(w))
-        .filter(F.col("total_rev") == F.col("_mx"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_rev")
-    )
-
-
-SQL_O7_TOP_SUPPLIER = """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-                       AS DECIMAL(20,6))) AS DOUBLE) AS total_rev
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1999-01-01'
-    AND l_shipdate <  TIMESTAMP '1999-04-01'
-  GROUP BY 1)
-SELECT s.s_suppkey, s.s_name, r.total_rev
-FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-WHERE r.total_rev = (SELECT max(total_rev) FROM rev)
 """
 
 
@@ -4557,255 +3436,6 @@ FROM keyed GROUP BY canonical_url
 """
 
 
-def q_a30_cust_order_dist(spark, sf_dir):
-    """TPC-H Q13 shape: the customer-order-count distribution INCLUDING
-    zero-order customers — a LEFT join (anti-join-like zeros must
-    survive), count at customer grain, then a tiny second fold at count
-    grain. The priority predicate lives in the JOIN CONDITION, not a
-    WHERE (a WHERE would turn the left join inner and lose the zeros).
-    Scale: both sides shuffle on custkey once; the count fold is
-    map-side combinable; the distribution fold's key space is bounded
-    by max orders/customer."""
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    ).select("o_custkey", "o_orderkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    per = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-    return per.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
-
-
-SQL_A30_CUST_ORDER_DIST = """
-WITH per_cust AS (
-  SELECT c.c_custkey, COUNT(o.o_orderkey) AS n_orders
-  FROM customer c LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey)
-SELECT n_orders, COUNT(*) AS n_customers FROM per_cust GROUP BY n_orders
-"""
-
-
-def q_a31_small_qty_revenue(spark, sf_dir):
-    """TPC-H Q17 shape: revenue lost to small-quantity orders — line
-    items whose quantity is under 20% of their part's average. The
-    correlated scalar subquery is re-expressed as ONE part-grain
-    aggregate joined back on partkey; the 0.2·avg comparison is integer
-    cross-multiplication (5·qty·cnt < sum — quantities are integral), so
-    the boundary can't flip on a float ULP in either engine. Part dim is
-    pruned to the probed brands BEFORE the join and the same filter
-    left-semi-prunes the fact via the partkey join; the terminal /7
-    division happens once on the final DECIMAL sum."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", F.col("l_quantity").cast("long").alias("qty"),
-        "l_extendedprice",
-    )
-    p = _t(spark, sf_dir, "part").filter(
-        F.col("p_brand").isin("Brand#23", "Brand#12")
-    ).select("p_partkey", "p_brand")
-    pa = li.groupBy("l_partkey").agg(
-        F.sum("qty").alias("s"), F.count("*").alias("c")
-    )
-    probe = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    small = probe.join(pa, "l_partkey").filter(
-        F.lit(5) * F.col("qty") * F.col("c") < F.col("s")
-    )
-    return small.groupBy("p_brand").agg(
-        F.round(
-            (F.sum(F.col("l_extendedprice").cast("decimal(20,6)"))
-             / F.lit(7).cast("decimal(20,6)")).cast("double"), 6
-        ).alias("avg_yearly"),
-        F.count("*").alias("n_small"),
-    )
-
-
-SQL_A31_SMALL_QTY_REVENUE = """
-WITH pa AS (
-  SELECT l_partkey, SUM(CAST(l_quantity AS BIGINT)) AS s, COUNT(*) AS c
-  FROM lineitem GROUP BY l_partkey)
-SELECT p.p_brand,
-       round(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(20,6)))
-                  / CAST(7 AS DECIMAL(20,6)) AS DOUBLE), 6) AS avg_yearly,
-       COUNT(*) AS n_small
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey AND p.p_brand IN ('Brand#23','Brand#12')
-JOIN pa ON pa.l_partkey = l.l_partkey
-WHERE 5 * CAST(l.l_quantity AS BIGINT) * pa.c < pa.s
-GROUP BY p.p_brand
-"""
-
-
-def q_a32_idle_rich_customers(spark, sf_dir):
-    """TPC-H Q22 shape: above-average-balance customers with no urgent
-    orders, per market segment. Balances become integer CENTS once
-    (round(bal·100) — the only rounding, identical in both engines on
-    2-decimal data); 'above average of the positive balances' is then
-    cents·n > sum — integer cross-multiplication against a 1-row
-    broadcast global, no float mean. The 'no urgent orders' test is a
-    LEFT ANTI join against the pre-filtered orders projection (the Q22
-    NOT EXISTS), which at scale left-semi-prunes orders to one column
-    before the shuffle."""
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cb"),
-    )
-    tot = c.filter(F.col("cb") > 0).agg(
-        F.sum("cb").alias("_s"), F.count("*").alias("_n")
-    )
-    rich = c.crossJoin(F.broadcast(tot)).filter(
-        F.col("cb") * F.col("_n") > F.col("_s")
-    )
-    urgent = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    ).select("o_custkey")
-    idle = rich.join(
-        urgent, rich.c_custkey == urgent.o_custkey, "left_anti"
-    )
-    return idle.groupBy("c_mktsegment").agg(
-        F.count("*").alias("n_customers"),
-        (F.sum("cb") / F.lit(100.0)).alias("total_bal"),
-    )
-
-
-SQL_A32_IDLE_RICH_CUSTOMERS = """
-WITH cents AS (
-  SELECT c_custkey, c_mktsegment, CAST(round(c_acctbal * 100) AS BIGINT) AS cb
-  FROM customer),
-pos AS (SELECT SUM(cb) AS s, COUNT(*) AS n FROM cents WHERE cb > 0)
-SELECT c_mktsegment, COUNT(*) AS n_customers, SUM(cb) / 100.0 AS total_bal
-FROM cents, pos
-WHERE cb * n > s
-  AND NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = cents.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-GROUP BY c_mktsegment
-"""
-
-
-def q_a33_waiting_suppliers(spark, sf_dir):
-    """TPC-H Q21 shape: suppliers who were the SOLE late shipper in a
-    multi-supplier finished order (late = shipped >60 days after the
-    order date — this dataset has no commit/receipt dates). The classic
-    EXISTS + double NOT-EXISTS correlation is re-expressed as ONE
-    order-grain aggregate: n_supp (distinct suppliers), n_late_supp
-    (distinct late suppliers), and the culprit via max(late supplier) —
-    valid exactly when n_late_supp = 1, which the filter pins. One
-    orderkey join + one orderkey-grain fold replaces three correlated
-    subqueries; the supplier dim attaches AFTER the fold at supplier
-    grain (bounded rows). Lateness is integral-day interval arithmetic,
-    identical cross-engine."""
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F"
-    ).select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    j = li.join(o, li.l_orderkey == o.o_orderkey)
-    late_supp = F.when(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
-        F.col("l_suppkey"),
-    )
-    per = j.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("n_supp"),
-        F.countDistinct(late_supp).alias("n_late_supp"),
-        F.max(late_supp).alias("culprit"),
-    )
-    culprits = per.filter(
-        (F.col("n_supp") > 1) & (F.col("n_late_supp") == 1)
-    ).groupBy("culprit").agg(F.count("*").alias("numwait"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return culprits.join(s, culprits.culprit == s.s_suppkey).select(
-        "s_name", "numwait"
-    )
-
-
-SQL_A33_WAITING_SUPPLIERS = """
-WITH per AS (
-  SELECT l.l_orderkey,
-         COUNT(DISTINCT l.l_suppkey) AS n_supp,
-         COUNT(DISTINCT CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-                             THEN l.l_suppkey END) AS n_late_supp,
-         MAX(CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-                  THEN l.l_suppkey END) AS culprit
-  FROM lineitem l JOIN orders o
-    ON l.l_orderkey = o.o_orderkey AND o.o_orderstatus = 'F'
-  GROUP BY l.l_orderkey)
-SELECT s.s_name, COUNT(*) AS numwait
-FROM per JOIN supplier s ON per.culprit = s.s_suppkey
-WHERE per.n_supp > 1 AND per.n_late_supp = 1
-GROUP BY s.s_name
-"""
-
-
-def q_a34_market_share(spark, sf_dir):
-    """TPC-H Q8 shape: one nation's share of a region's revenue for one
-    part type, per order year. Both bounded dims (nation⋈region on the
-    customer side, nation on the supplier side) and the type-pruned part
-    projection are explicitly broadcast — the fact joins shuffle on
-    their own keys only; the share is a conditional/total pair riding
-    ONE aggregate (no second pass), divided once and rounded at 6 dp.
-    Revenue is the DECIMAL(20,6) cast-sum of extprice·(1−discount)."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    cn = n.join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
-    ).select(F.col("n_nationkey").alias("c_nkey"))
-    sn = n.select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    )
-    p = _t(spark, sf_dir, "part").filter(
-        F.col("p_type") == "ECONOMY"
-    ).select("p_partkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(20,6)")
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("c_nkey"))
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == F.col("s_nkey"))
-    )
-    agg = j.groupBy(F.year("o_orderdate").alias("o_year")).agg(
-        F.sum(F.when(F.col("supp_nation") == "NATION_3", rev)
-              .otherwise(F.lit(0).cast("decimal(20,6)"))).alias("_n"),
-        F.sum(rev).alias("_d"),
-    )
-    return agg.select(
-        "o_year",
-        F.round((F.col("_n") / F.col("_d")).cast("double"), 6).alias("mkt_share"),
-        F.col("_d").cast("double").alias("total_rev"),
-    )
-
-
-SQL_A34_MARKET_SHARE = """
-SELECT year(o.o_orderdate) AS o_year,
-       round(CAST(SUM(CASE WHEN sn.n_name = 'NATION_3'
-                           THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(20,6))
-                           ELSE CAST(0 AS DECIMAL(20,6)) END)
-                  / SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(20,6)))
-                  AS DOUBLE), 6) AS mkt_share,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(20,6))) AS DOUBLE)
-         AS total_rev
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey AND p.p_type = 'ECONOMY'
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-JOIN region r ON cn.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-GROUP BY year(o.o_orderdate)
-"""
-
-
 def q_split_leak_safe(spark, sf_dir):
     """Leakage-safe train/val/test assignment
     (operators/curation.py:leak_safe_split): the split key is the
@@ -4959,115 +3589,6 @@ SELECT coalesce(o.node, i.node) AS node,
        coalesce(out_degree, 0) AS out_degree,
        coalesce(in_degree, 0) AS in_degree
 FROM o FULL OUTER JOIN i ON o.node = i.node
-"""
-
-
-def q_a36_revenue_delta(spark, sf_dir):
-    """TPC-H Q6 shape: the what-if revenue delta from discounted small
-    orders — a pure scan-side query whose POINT is pushdown: every
-    predicate (date window, discount band, quantity cap) must reach the
-    parquet scan as PushedFilters with only 3 columns read; one
-    map-side-combined DECIMAL fold, no join, no second shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    lo = F.lit("1999-01-01").cast("timestamp")
-    hi = F.lit("2000-01-01").cast("timestamp")
-    sel = li.filter(
-        (F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi)
-        & (F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return sel.agg(
-        _dec_sum(F.col("l_extendedprice") * F.col("l_discount"), "revenue_delta"),
-        F.count("*").alias("n_lines"),
-    )
-
-
-SQL_A36_REVENUE_DELTA = """
-SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(20,6))) AS DOUBLE)
-         AS revenue_delta,
-       COUNT(*) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1999-01-01' AND l_shipdate < TIMESTAMP '2000-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-"""
-
-
-def q_a35_supplier_census(spark, sf_dir):
-    """TPC-H Q16 shape: distinct-supplier census per (brand, size band),
-    EXCLUDING a complained-about supplier set — the NOT IN subquery
-    becomes a broadcast LEFT ANTI on the bounded supplier dim before
-    the fact join; supply relationships come from observed lineitems
-    (this dataset has no partsupp). Exact COUNT(DISTINCT supplier) via
-    Spark's Expand planning — one shuffle, map-side partials."""
-    s_bad = _t(spark, sf_dir, "supplier").filter(
-        F.col("s_acctbal") < 0
-    ).select("s_suppkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    ok = li.join(
-        F.broadcast(s_bad), li.l_suppkey == s_bad.s_suppkey, "left_anti"
-    )
-    p = _t(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand", (F.col("p_size") % 5).alias("size_band")
-    )
-    return (
-        ok.join(p, ok.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "size_band")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-SQL_A35_SUPPLIER_CENSUS = """
-SELECT p.p_brand, p.p_size % 5 AS size_band,
-       COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p.p_brand, p.p_size % 5
-"""
-
-
-def q_a37_dominant_suppliers(spark, sf_dir):
-    """TPC-H Q20 shape: suppliers who shipped more than TWICE a part's
-    average per-supplier volume (single-source risk / the excess-stock
-    probe reshaped to this schema). The nested correlated aggregate
-    becomes two folds of ONE scan grain apart — (part, supplier)
-    quantity, then part totals — joined at part grain; the 2×-average
-    test is integer cross-multiplication (sq·n_supp > 2·tq) on
-    integral-valued quantities, never a float mean. Supplier names
-    attach AFTER the dominance reduction at bounded supplier grain."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", F.col("l_quantity").cast("long").alias("qty")
-    )
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(F.sum("qty").alias("sq"))
-    pt = ps.groupBy("l_partkey").agg(
-        F.sum("sq").alias("tq"), F.count("*").alias("n_supp")
-    )
-    dom = ps.join(pt, "l_partkey").filter(
-        (F.col("n_supp") > 1)
-        & (F.col("sq") * F.col("n_supp") > F.lit(2) * F.col("tq"))
-    )
-    per_s = dom.groupBy("l_suppkey").agg(
-        F.count("*").alias("n_dominated"),
-        F.sum("sq").alias("qty_dominated"),
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return per_s.join(s, per_s.l_suppkey == s.s_suppkey).select(
-        "s_name", "n_dominated", "qty_dominated"
-    )
-
-
-SQL_A37_DOMINANT_SUPPLIERS = """
-WITH ps AS (
-  SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS BIGINT)) AS sq
-  FROM lineitem GROUP BY l_partkey, l_suppkey),
-pt AS (SELECT l_partkey, SUM(sq) AS tq, COUNT(*) AS n_supp FROM ps GROUP BY l_partkey),
-dom AS (
-  SELECT ps.l_suppkey, ps.sq
-  FROM ps JOIN pt ON ps.l_partkey = pt.l_partkey
-  WHERE pt.n_supp > 1 AND ps.sq * pt.n_supp > 2 * pt.tq)
-SELECT s.s_name, COUNT(*) AS n_dominated, SUM(dom.sq) AS qty_dominated
-FROM dom JOIN supplier s ON dom.l_suppkey = s.s_suppkey
-GROUP BY s.s_name
 """
 
 
@@ -5315,56 +3836,6 @@ LIMIT {k}
 """
 
 
-def q_a38_nation_profit(spark, sf_dir):
-    """TPC-H Q9 shape: product-line profit per supplier nation per order
-    year (this dataset has no partsupp, so cost is the retail-price
-    proxy 0.1·p_retailprice·qty). The per-row profit expression keeps
-    IDENTICAL operand order in both engines — same doubles — then rides
-    the DECIMAL(20,6) cast-sum; nation dim broadcast; part pruned by the
-    name predicate BEFORE its join."""
-    p = _t(spark, sf_dir, "part").filter(
-        F.col("p_name").contains("red")
-    ).select("p_partkey", "p_retailprice")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey"), F.col("n_name").alias("nation")
-    )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey",
-        "l_extendedprice", "l_discount", "l_quantity",
-    )
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * F.col("l_quantity") * 0.1
-    ).cast("decimal(20,6)")
-    j = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-    )
-    return j.groupBy("nation", F.year("o_orderdate").alias("o_year")).agg(
-        F.sum(profit).cast("double").alias("profit"),
-        F.count("*").alias("n_lines"),
-    )
-
-
-SQL_A38_NATION_PROFIT = """
-SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                     - p.p_retailprice * l.l_quantity * 0.1
-                     AS DECIMAL(20,6))) AS DOUBLE) AS profit,
-       COUNT(*) AS n_lines
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey AND p.p_name LIKE '%red%'
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-GROUP BY n.n_name, year(o.o_orderdate)
-"""
-
-
 def q_tok_bytes_ratio(spark, sf_dir):
     # Tokenizer-fertility profile per language: bytes-per-whitespace-token
     # is the standard proxy for how expensive a language is to tokenize
@@ -5454,38 +3925,6 @@ SELECT source,
                   / CAST(COUNT(*) AS DECIMAL(38,12)), 6)
             AS DOUBLE) AS hapax_share
 FROM per_term GROUP BY 1
-"""
-
-
-def q_a39_salted_hot_agg(spark, sf_dir):
-    # The north-star's "explicit salting for skewed hosts" as a
-    # first-class oracle-paired operator: a hot grouping key is split
-    # into 16 salt shards (pmod of the row id — deterministic, uniform),
-    # partially aggregated per (key, salt), then folded to key grain.
-    # The hot key's shuffle rows are bounded by partitions×16 partials
-    # instead of its raw row count, so one Zipf-headed key can no longer
-    # pin a single reducer. Value-identity is exact BECAUSE the leaf sum
-    # is the DECIMAL(20,6) cast-sum — decimal addition is associative, so
-    # two-stage == one-stage bit-for-bit and the twin can stay a plain
-    # GROUP BY. (A double sum here would be order-sensitive and
-    # hash-flaky by design.)
-    e = _t(spark, sf_dir, "events")
-    salted = e.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(16)))
-    partial = salted.groupBy("event_type", "_salt").agg(
-        F.sum(F.col("value").cast("decimal(20,6)")).alias("_psum"),
-        F.count("*").alias("_pcnt"),
-    )
-    return partial.groupBy("event_type").agg(
-        F.sum("_psum").cast("double").alias("total_value"),
-        F.sum("_pcnt").alias("n_events"),
-    )
-
-
-SQL_A39_SALTED_HOT_AGG = """
-SELECT event_type,
-       CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value,
-       COUNT(*) AS n_events
-FROM events GROUP BY 1
 """
 
 
@@ -5773,72 +4212,6 @@ SELECT e.a, e.b, e.n_match,
                        / CAST(len(list_distinct(list_cat(sa.s, sb.s))) AS DOUBLE)
                   ELSE 0.0 END, 6) AS jaccard
 FROM est e JOIN shd sa ON sa.doc_id = e.a JOIN shd sb ON sb.doc_id = e.b
-"""
-
-
-def q_o8_min_cost_supplier(spark, sf_dir):
-    """TPC-H Q2 shape: for each qualifying part, the supplier offering
-    the MINIMUM observed price — the classic correlated-subquery
-    decorrelation (`WHERE cost = (SELECT min(cost) ... p_partkey =
-    outer)`) re-expressed as one argmin aggregation. Offers come from
-    observed lineitems (this schema has no partsupp).
-
-    Scale shape: the argmin is min(struct(price, suppkey)) — ONE
-    map-side-combined hash aggregate at part grain whose state is a
-    single struct, no per-part window sort and no self-join back for
-    the min (the naive decorrelation scans offers twice). The
-    tie-break is INTEGRAL (lowest suppkey at equal price) so the
-    selected row is deterministic in any engine; part and supplier
-    dims broadcast after their filters prune them. Struct-min picks
-    lexicographic (price, suppkey) order — exactly the `ORDER BY
-    price, suppkey LIMIT 1` semantics of the subquery form, which the
-    DuckDB twin spells with a row_number window (same total order, so
-    identical rows; windows per part are bounded fan-in there)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    p = _t(spark, sf_dir, "part").filter(
-        (F.col("p_size") >= 10) & (F.col("p_size") <= 20)
-        & (F.col("p_type") == "STANDARD")
-    ).select("p_partkey", "p_brand", "p_size")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    offers = li.join(
-        F.broadcast(p), li.l_partkey == p.p_partkey
-    )
-    best = offers.groupBy("p_partkey", "p_brand", "p_size").agg(
-        F.min(F.struct(F.col("l_extendedprice"), F.col("l_suppkey"))).alias("_m")
-    ).select(
-        "p_partkey", "p_brand", "p_size",
-        F.col("_m.l_extendedprice").alias("best_price"),
-        F.col("_m.l_suppkey").alias("s_suppkey"),
-    )
-    return (
-        best.join(F.broadcast(s), "s_suppkey")
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("p_partkey", "p_brand", "p_size", "best_price",
-                "s_suppkey", "s_name", "n_name")
-    )
-
-
-SQL_O8_MIN_COST_SUPPLIER = """
-WITH p AS (
-  SELECT p_partkey, p_brand, p_size FROM part
-  WHERE p_size >= 10 AND p_size <= 20 AND p_type = 'STANDARD'
-),
-offers AS (
-  SELECT p.p_partkey, p.p_brand, p.p_size, l.l_suppkey, l.l_extendedprice,
-         row_number() OVER (PARTITION BY p.p_partkey
-                            ORDER BY l.l_extendedprice, l.l_suppkey) AS rn
-  FROM lineitem l JOIN p ON l.l_partkey = p.p_partkey
-)
-SELECT o.p_partkey, o.p_brand, o.p_size,
-       o.l_extendedprice AS best_price,
-       o.l_suppkey AS s_suppkey, s.s_name, n.n_name
-FROM offers o
-JOIN supplier s ON s.s_suppkey = o.l_suppkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-WHERE o.rn = 1
 """
 
 
@@ -6394,26 +4767,6 @@ FROM powed CROSS JOIN norm
 """
 
 
-def q_fd_violations(spark, sf_dir):
-    """Functional-dependency audit (operators/metrics.py:fd_violations)
-    over events: which users violate 'one user ⇒ one event_type' —
-    i.e. the census a declared DQ rule produces when it does NOT hold.
-    Two stacked aggregates (groupBy(lhs, rhs) → groupBy(lhs)) so
-    per-group state stays bounded at any rhs cardinality."""
-    from ..operators.metrics import fd_violations
-
-    return fd_violations(_t(spark, sf_dir, "events"), "user_id", "event_type")
-
-
-SQL_FD_VIOLATIONS = """
-WITH pairs AS (
-  SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2
-)
-SELECT user_id, SUM(c) AS n_rows, COUNT(*) AS n_distinct_rhs
-FROM pairs GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
 def q_int8_topk(spark, sf_dir):
     """INT8-quantized brute-force top-k (operators/similarity.py:
     int8_topk) — FAISS-SQ8-style 4× scan-byte reduction; the inner
@@ -6506,63 +4859,6 @@ FROM agg
 """
 
 
-def q_benford_census(spark, sf_dir):
-    """Benford first-digit audit over events.value — the classic
-    fabricated-numbers alarm: natural multi-scale magnitudes follow
-    P(d) = log10(1 + 1/d); synthetic or truncated feeds don't. One
-    map-only digit extraction + one 9-row aggregate; observed shares
-    are integers divided once; expected shares are fixed literals
-    generated from the same formula on both sides."""
-    import math
-
-    e = _t(spark, sf_dir, "events").filter(F.abs(F.col("value")) > 0)
-    digit = F.substring(
-        F.regexp_replace(
-            F.format_number(F.abs(F.col("value")), 12), r"[0.,]", ""
-        ), 1, 1
-    ).cast("int")
-    counts = e.select(digit.alias("digit")).groupBy("digit").agg(
-        F.count("*").alias("n")
-    )
-    tot = counts.agg(F.sum("n").alias("_t"))
-    exp_map = F.create_map(
-        *[x for d in range(1, 10)
-          for x in (F.lit(d), F.lit(round(math.log10(1 + 1 / d), 9)))]
-    )
-    return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            "digit", "n",
-            F.round(F.col("n").cast("double") / F.col("_t").cast("double"), 9)
-            .alias("obs_share"),
-            exp_map[F.col("digit")].alias("benford_share"),
-        )
-    )
-
-
-def _sql_benford_census() -> str:
-    import math
-
-    exp_case = " ".join(
-        f"WHEN {d} THEN {round(math.log10(1 + 1 / d), 9)!r}"
-        for d in range(1, 10)
-    )
-    return f"""
-WITH e AS (SELECT abs(value) AS v FROM events WHERE abs(value) > 0),
-d AS (
-  SELECT CAST(substr(regexp_replace(format('{{:.12f}}', v), '[0.,]', '', 'g'), 1, 1)
-              AS INT) AS digit
-  FROM e
-),
-c AS (SELECT digit, COUNT(*) AS n FROM d GROUP BY 1),
-t AS (SELECT SUM(n) AS t FROM c)
-SELECT digit, n,
-       round(CAST(n AS DOUBLE) / CAST(t AS DOUBLE), 9) AS obs_share,
-       CASE digit {exp_case} END AS benford_share
-FROM c CROSS JOIN t
-"""
-
-
 def q_incremental_curation_e2e(spark, sf_dir):
     """Round-5 capstone CHAIN, oracle-checked as ONE plan (composition
     is where semantic drift hides — web_curation_e2e's discipline):
@@ -6641,12 +4937,11 @@ SELECT doc_id, nb AS n_bytes_clean FROM ranked WHERE rn = 1
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 37
 # Probabilistic-sketch family (operators/sketches.py): md5-derived
-# deterministic HyperLogLog, count-min, and Bloom filter — the whole
-# sketch state is oracle-checkable, not just its contract — plus Gini
-# source concentration and a CUSUM changepoint detector (curation.py).
+# deterministic HyperLogLog and count-min — the whole sketch state is
+# oracle-checkable, not just its contract — plus Gini source
+# concentration (curation.py).
 
 _HLL_RAW_NUM = repr((0.7213 / (1.0 + 1.079 / 256.0)) * 256 * 256 * float(1 << 57))
 
@@ -6766,66 +5061,6 @@ FROM est
 """
 
 
-def q_bloom_custkeys(spark, sf_dir):
-    """Bloom-filter membership report: a 65 536-bit / 4-hash filter
-    built over orders.o_custkey, probed by every customer key, per
-    market segment (operators/sketches.py:bloom_probe_report) — the
-    explicit, oracle-checkable form of the runtime bloom join
-    pre-filter; claimed >= actual (no false negatives) with the real
-    false-positive rate per segment."""
-    from ..operators.sketches import bloom_probe_report
-
-    return bloom_probe_report(
-        _t(spark, sf_dir, "orders"), "o_custkey",
-        _t(spark, sf_dir, "customer"), "c_custkey",
-        group_col="c_mktsegment",
-    ).orderBy("c_mktsegment")
-
-
-SQL_BLOOM_CUSTKEYS = """
-WITH ks AS (SELECT unnest([0, 1, 2, 3]) AS k),
-bits AS (
-  SELECT DISTINCT
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':'
-                                 || CAST(o_custkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM orders CROSS JOIN ks
-),
-probes AS (
-  SELECT DISTINCT c_mktsegment AS grp, CAST(c_custkey AS VARCHAR) AS key
-  FROM customer
-),
-ex AS (
-  SELECT grp, key,
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':' || key), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM probes CROSS JOIN ks
-),
-claimed AS (
-  SELECT grp, key FROM ex JOIN bits USING (pos)
-  GROUP BY grp, key HAVING COUNT(*) = 4
-),
-actual AS (SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS key FROM orders),
-marked AS (
-  SELECT p.grp,
-         (c.key IS NOT NULL) AS claimed,
-         (a.key IS NOT NULL) AS actual
-  FROM probes p
-  LEFT JOIN claimed c ON c.grp = p.grp AND c.key = p.key
-  LEFT JOIN actual a ON a.key = p.key
-)
-SELECT grp AS c_mktsegment,
-       COUNT(*) AS n_probes,
-       SUM(CASE WHEN claimed THEN 1 ELSE 0 END) AS n_claimed_present,
-       SUM(CASE WHEN actual THEN 1 ELSE 0 END) AS n_actually_present,
-       SUM(CASE WHEN claimed AND NOT actual THEN 1 ELSE 0 END) AS n_false_positives,
-       round(CAST(SUM(CASE WHEN claimed AND NOT actual THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(greatest(SUM(CASE WHEN NOT actual THEN 1 ELSE 0 END), 1) AS DOUBLE),
-             6) AS fp_rate
-FROM marked GROUP BY grp ORDER BY grp
-"""
-
-
 def q_gini_sources(spark, sf_dir):
     """One-row Gini coefficient of document concentration across
     sources (operators/curation.py:gini_concentration) — the
@@ -6858,53 +5093,8 @@ FROM agg
 """
 
 
-def q_cusum_drift(spark, sf_dir):
-    """Per-event-type CUSUM changepoint over daily value totals
-    (operators/curation.py:cusum_changepoint) — the exact-arithmetic
-    level-shift detector (D_t = n*P_t - t*T, all DECIMAL), one float
-    division per group at the end."""
-    from ..operators.curation import cusum_changepoint
-
-    return cusum_changepoint(_t(spark, sf_dir, "events"))
-
-
-SQL_CUSUM_DRIFT = """
-WITH daily AS (
-  SELECT event_type AS grp, CAST(ts AS DATE) AS day,
-         SUM(CAST(value AS DECIMAL(20,6))) AS x
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT grp, day,
-         row_number() OVER (PARTITION BY grp ORDER BY day) AS t,
-         SUM(x) OVER (PARTITION BY grp ORDER BY day
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p,
-         COUNT(*) OVER (PARTITION BY grp) AS n,
-         SUM(x) OVER (PARTITION BY grp) AS tot
-  FROM daily
-),
-scored AS (
-  SELECT grp, day, n,
-         abs(CAST(n AS DECIMAL(10,0)) * CAST(p AS DECIMAL(26,6))
-             - CAST(t AS DECIMAL(10,0)) * CAST(tot AS DECIMAL(26,6))) AS absd
-  FROM st
-),
-pick AS (
-  SELECT grp, day, n, absd,
-         row_number() OVER (PARTITION BY grp ORDER BY absd DESC, day) AS rk
-  FROM scored
-)
-SELECT grp AS event_type, n AS n_days, day AS changepoint_day,
-       round(CAST(absd AS DOUBLE) / CAST(n AS DOUBLE), 6) AS max_abs_cusum
-FROM pick WHERE rk = 1
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 38
-# Graph authority scores, multi-objective skyline, Q11-shaped revenue
-# concentration, Spark's native session_window pinned against a
-# first-principles gap-logic twin, and a column-completeness profiler.
+# Graph authority scores and a column-completeness profiler.
 
 
 def q_hits_scores(spark, sf_dir):
@@ -6963,132 +5153,6 @@ FROM h{n_iter} h JOIN a{n_iter} a ON a.node = h.node
 
 
 SQL_HITS_SCORES = _sql_hits(2)
-
-
-def q_skyline_orders(spark, sf_dir):
-    """2-D Pareto frontier over orders: the orders not dominated on
-    (o_totalprice, o_orderdate) — "newest AND highest-value" shortlist
-    (operators/metrics.py:pareto_frontier_2d). Staircase construction
-    (per-x maxima fold -> running-max window over the bounded distinct-x
-    table -> broadcast join back), never the quadratic NOT-EXISTS
-    self-join; pure comparisons so floats/timestamps are engine-exact."""
-    from ..operators.metrics import pareto_frontier_2d
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice",
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("order_tus"),
-    )
-    return pareto_frontier_2d(o, "o_totalprice", "order_tus")
-
-
-SQL_SKYLINE_ORDERS = """
-WITH o AS (
-  SELECT o_orderkey, o_totalprice, epoch_us(o_orderdate) AS order_tus
-  FROM orders
-),
-g AS (SELECT o_totalprice AS x, MAX(order_tus) AS gy FROM o GROUP BY 1),
-k AS (
-  SELECT x, gy,
-         MAX(gy) OVER (ORDER BY x DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev
-  FROM g
-),
-kept AS (SELECT x, gy FROM k WHERE prev IS NULL OR gy > prev)
-SELECT o.o_orderkey, o.o_totalprice, o.order_tus
-FROM o JOIN kept ON o.o_totalprice = kept.x AND o.order_tus = kept.gy
-"""
-
-
-def q_a40_revenue_concentration(spark, sf_dir):
-    """TPC-H Q11-shaped revenue concentration: parts whose discounted
-    revenue exceeds 1.5x the MEAN per-part share — the scale-free form
-    of Q11's SF-scaled fraction (a fixed basis-point cut empties or
-    floods as the part count grows; a mean-multiple is invariant). The
-    global-threshold HAVING shape: one fact fold to part grain, the
-    1-row (total, n_parts) broadcast back, and the threshold test is an
-    exact DECIMAL/BIGINT cross-multiplication (rev * n_parts * 2 >
-    tot * 3) so the boundary never rides a float ULP."""
-    li = _t(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_partkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            .cast("decimal(20,6)")
-        ).alias("_rev")
-    )
-    tot = per.agg(F.sum("_rev").alias("_tot"), F.count("*").alias("_np"))
-    out = per.crossJoin(F.broadcast(tot)).filter(
-        F.col("_rev") * F.col("_np") * 2 > F.col("_tot") * 3
-    )
-    return out.select(
-        "l_partkey",
-        F.col("_rev").cast("double").alias("revenue"),
-        F.round(
-            F.col("_rev").cast("double") * 10000.0 / F.col("_tot").cast("double"),
-            6,
-        ).alias("share_bp"),
-    )
-
-
-SQL_A40_REVENUE_CONCENTRATION = """
-WITH per AS (
-  SELECT l_partkey,
-         SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(20,6))) AS rev
-  FROM lineitem GROUP BY 1
-),
-tot AS (SELECT SUM(rev) AS tot, COUNT(*) AS np FROM per)
-SELECT l_partkey,
-       CAST(rev AS DOUBLE) AS revenue,
-       round(CAST(rev AS DOUBLE) * 10000.0 / CAST(tot AS DOUBLE), 6) AS share_bp
-FROM per CROSS JOIN tot
-WHERE rev * np * 2 > tot * 3
-"""
-
-
-def q_session_window_native(spark, sf_dir):
-    """Spark's NATIVE session_window (30-minute gap) over events,
-    pinned value-for-value against a first-principles gap-logic twin
-    (lag -> new-session flag -> running-sum id -> fold): proves the
-    built-in operator's merge semantics (session end = last event +
-    gap, exclusive boundary) match the hand-rolled definition
-    sessionize_events uses — so the two are interchangeable and the
-    cheaper native form can serve batch AND streaming. Timestamps
-    emitted as epoch-us longs (repo discipline)."""
-    ev = _t(spark, sf_dir, "events")
-    out = ev.groupBy(
-        "user_id", F.session_window(F.col("ts"), "30 minutes").alias("w")
-    ).agg(F.count("*").alias("n_events"))
-    return out.select(
-        "user_id",
-        F.unix_micros(F.col("w.start").cast("timestamp")).alias("session_start_us"),
-        F.unix_micros(F.col("w.end").cast("timestamp")).alias("session_end_us"),
-        "n_events",
-    )
-
-
-SQL_SESSION_WINDOW_NATIVE = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS tus FROM events
-),
-flagged AS (
-  SELECT user_id, tus,
-         CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id ORDER BY tus)
-                   >= 1800000000
-              OR lag(tus) OVER (PARTITION BY user_id ORDER BY tus) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-),
-sid AS (
-  SELECT user_id, tus,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-  FROM flagged
-)
-SELECT user_id,
-       MIN(tus) AS session_start_us,
-       MAX(tus) + 1800000000 AS session_end_us,
-       COUNT(*) AS n_events
-FROM sid GROUP BY user_id, s
-"""
 
 
 def q_profile_documents(spark, sf_dir):
@@ -7155,7 +5219,6 @@ SELECT 'n_chars', COUNT(*),
        COUNT(DISTINCT n_chars)
 FROM documents
 """
-
 
 
 # ------------------------------------------------------------ round-5 batch 39
@@ -7413,10 +5476,9 @@ GROUP BY doc_id HAVING COUNT(*) = 3
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 40
-# Exact-k weighted sampling, spike detection, grouped HLL, mutual
-# information, and pairwise FD discovery.
+# Exact-k weighted sampling, grouped HLL, mutual information, and
+# pairwise FD discovery.
 
 
 def q_wrs_sample(spark, sf_dir):
@@ -7446,43 +5508,6 @@ WITH s AS (
 )
 SELECT doc_id, n_chars, wrs_key FROM s
 ORDER BY wrs_key DESC, doc_id LIMIT 100
-"""
-
-
-def q_spike_zscore(spark, sf_dir):
-    """Per-type daily-volume spike detector: each day's event count
-    z-scored against the trailing 7 FULL days (operators/sessions.py:
-    daily_spike_zscore) — exact integer window sums, one fixed IEEE z
-    per row, zero-variance guarded."""
-    from ..operators.sessions import daily_spike_zscore
-
-    return daily_spike_zscore(_t(spark, sf_dir, "events"))
-
-
-SQL_SPIKE_ZSCORE = """
-WITH daily AS (
-  SELECT event_type AS grp, CAST(ts AS DATE) AS day, COUNT(*) AS n_events
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT grp, day, n_events,
-         COUNT(*) OVER w AS np,
-         SUM(n_events) OVER w AS sx,
-         SUM(n_events * n_events) OVER w AS sxx
-  FROM daily
-  WINDOW w AS (PARTITION BY grp ORDER BY day
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-)
-SELECT grp AS event_type, day, n_events,
-       round(CASE WHEN CAST(sxx AS DOUBLE) / 7.0
-                       - (CAST(sx AS DOUBLE) / 7.0) * (CAST(sx AS DOUBLE) / 7.0)
-                       > 0
-                  THEN (CAST(n_events AS DOUBLE) - CAST(sx AS DOUBLE) / 7.0)
-                       / sqrt(CAST(sxx AS DOUBLE) / 7.0
-                              - (CAST(sx AS DOUBLE) / 7.0)
-                                * (CAST(sx AS DOUBLE) / 7.0))
-                  ELSE 0.0 END, 6) AS z
-FROM st WHERE np = 7
 """
 
 
@@ -7619,168 +5644,7 @@ SQL_FD_CENSUS = "\nUNION ALL\n".join(
 )
 
 
-
 # ------------------------------------------------------------ round-5 batch 41
-# Robust trend (Theil-Sen), behavioral path mining, sketch-composed
-# join-size estimation, PSI drift, and contrastive negative sampling.
-
-
-def q_theilsen_trend(spark, sf_dir):
-    """Per-type Theil-Sen median slope of daily event volume
-    (operators/sessions.py:theilsen_daily_trend) — the robust trend a
-    glitch day cannot move; pairwise slopes over the BOUNDED per-group
-    day table, rank-selected median."""
-    from ..operators.sessions import theilsen_daily_trend
-
-    return theilsen_daily_trend(_t(spark, sf_dir, "events"))
-
-
-SQL_THEILSEN_TREND = """
-WITH daily AS (
-  SELECT event_type AS grp, CAST(ts AS DATE) AS day, COUNT(*) AS c
-  FROM events GROUP BY 1, 2
-),
-t AS (
-  SELECT grp, row_number() OVER (PARTITION BY grp ORDER BY day) AS t, c
-  FROM daily
-),
-pairs AS (
-  SELECT a.grp, a.t AS i, b.t AS j,
-         CAST(b.c - a.c AS DOUBLE) / CAST(b.t - a.t AS DOUBLE) AS slope
-  FROM t a JOIN t b ON a.grp = b.grp AND a.t < b.t
-),
-ranked AS (
-  SELECT grp, slope,
-         row_number() OVER (PARTITION BY grp ORDER BY slope, i, j) AS rk,
-         COUNT(*) OVER (PARTITION BY grp) AS np
-  FROM pairs
-),
-mid AS (
-  SELECT grp, slope, np FROM ranked
-  WHERE rk = floor((np + 1) / 2) OR rk = ceil((np + 1) / 2)
-),
-med AS (
-  SELECT grp, MAX(np) AS n_pairs, SUM(slope) / COUNT(*) AS m
-  FROM mid GROUP BY grp
-),
-days AS (SELECT grp, MAX(t) AS n_days FROM t GROUP BY grp)
-SELECT med.grp AS event_type, n_days, n_pairs, round(m, 6) AS slope_per_day
-FROM med JOIN days ON med.grp = days.grp
-"""
-
-
-def q_event_paths3(spark, sf_dir):
-    """Top-20 3-event behavioral paths (operators/sessions.py:
-    event_paths) — path mining over per-user event order; one user-key
-    shuffle, map-side path fold, TakeOrderedAndProject selection."""
-    from ..operators.sessions import event_paths
-
-    return event_paths(_t(spark, sf_dir, "events"))
-
-
-SQL_EVENT_PATHS3 = """
-WITH o AS (
-  SELECT event_type,
-         lag(event_type, 2) OVER w AS e1,
-         lag(event_type, 1) OVER w AS e2
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_type)
-)
-SELECT e1 || '>' || e2 || '>' || event_type AS path,
-       COUNT(*) AS n_occurrences
-FROM o WHERE e1 IS NOT NULL
-GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 20
-"""
-
-
-def q_cms_join_est(spark, sf_dir):
-    """Join-size estimation by count-min inner product
-    (operators/sketches.py:cms_join_cardinality): |orders x customer on
-    custkey| estimated from two 4 096-counter sketches (min over rows
-    of the cell-wise product sum — never an underestimate), next to
-    the exact count it replaces at planning time."""
-    from ..operators.sketches import cms_join_cardinality
-
-    return cms_join_cardinality(
-        _t(spark, sf_dir, "orders"), "o_custkey",
-        _t(spark, sf_dir, "customer"), "c_custkey",
-    )
-
-
-SQL_CMS_JOIN_EST = """
-WITH ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
-c1 AS (
-  SELECT d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                                 || CAST(o_custkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM orders CROSS JOIN ds
-),
-s1 AS (SELECT row_id, col_id, COUNT(*) AS cnt FROM c1 GROUP BY 1, 2),
-c2 AS (
-  SELECT d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                                 || CAST(c_custkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM customer CROSS JOIN ds
-),
-s2 AS (SELECT row_id, col_id, COUNT(*) AS cnt2 FROM c2 GROUP BY 1, 2),
-ip AS (
-  SELECT s1.row_id,
-         SUM(CAST(s1.cnt AS DECIMAL(19,0)) * CAST(s2.cnt2 AS DECIMAL(18,0))) AS ipd
-  FROM s1 JOIN s2 ON s1.row_id = s2.row_id AND s1.col_id = s2.col_id
-  GROUP BY 1
-),
-est AS (SELECT CAST(MIN(ipd) AS BIGINT) AS cms_estimate FROM ip),
-ex AS (
-  SELECT COUNT(*) AS exact_join_count
-  FROM orders o JOIN customer c
-  ON CAST(o.o_custkey AS VARCHAR) = CAST(c.c_custkey AS VARCHAR)
-)
-SELECT cms_estimate, exact_join_count,
-       cms_estimate - exact_join_count AS overcount
-FROM est CROSS JOIN ex
-"""
-
-
-def q_psi_value_drift(spark, sf_dir):
-    """Population Stability Index of events.value, first half of
-    January vs second (operators/curation.py:psi_drift) — the
-    industry-standard drift score with an explicit skipped-bucket
-    census instead of a silent epsilon."""
-    from ..operators.curation import psi_drift
-
-    ev = _t(spark, sf_dir, "events")
-    ref = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    return psi_drift(ev, "value", ref)
-
-
-SQL_PSI_VALUE_DRIFT = """
-WITH cells AS (
-  SELECT floor(CAST(value AS DOUBLE) / 10.0) AS bucket,
-         SUM(CASE WHEN epoch_us(ts) < 1705363200000000 THEN 1 ELSE 0 END) AS n_ref,
-         SUM(CASE WHEN epoch_us(ts) < 1705363200000000 THEN 0 ELSE 1 END) AS n_cur
-  FROM events GROUP BY 1
-),
-tot AS (SELECT SUM(n_ref) AS t_ref, SUM(n_cur) AS t_cur FROM cells),
-j AS (
-  SELECT (n_ref > 0 AND n_cur > 0) AS is_both,
-         CASE WHEN n_ref > 0 AND n_cur > 0
-              THEN CAST(round(
-                (CAST(n_ref AS DOUBLE) / CAST(t_ref AS DOUBLE)
-                 - CAST(n_cur AS DOUBLE) / CAST(t_cur AS DOUBLE))
-                * ln((CAST(n_ref AS DOUBLE) / CAST(t_ref AS DOUBLE))
-                     / (CAST(n_cur AS DOUBLE) / CAST(t_cur AS DOUBLE))), 9)
-              AS DECIMAL(20,9))
-              ELSE CAST(0.0 AS DECIMAL(20,9)) END AS t
-  FROM cells CROSS JOIN tot
-)
-SELECT SUM(CASE WHEN is_both THEN 1 ELSE 0 END) AS n_buckets,
-       SUM(CASE WHEN is_both THEN 0 ELSE 1 END) AS n_skipped,
-       round(CAST(SUM(t) AS DOUBLE), 6) AS psi
-FROM j
-"""
-
 
 def q_negative_samples(spark, sf_dir):
     """Deterministic same-source hard negatives for contrastive
@@ -7817,10 +5681,9 @@ WHERE negative_id <> anchor_id
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 42
-# Privacy risk census, order-insensitive dataset fingerprints, EXACT
-# set-similarity join (prefix filtering), and props-key schema drift.
+# Privacy risk census, order-insensitive dataset fingerprints, and
+# EXACT set-similarity join (prefix filtering).
 
 
 def q_k_anon_docs(spark, sf_dir):
@@ -7971,117 +5834,7 @@ WHERE s.n_shared * 10 >= 9 * (za.s + zb.s - s.n_shared)
 """
 
 
-def q_props_key_drift(spark, sf_dir):
-    """JSON-schema DRIFT census of the open props sidecar: keys that
-    appear in only ONE half of the month flag as drifted, per event
-    type — the upstream-deploy detector behind props_key_census (a key
-    vanishing or appearing mid-month is a producer schema change); the
-    full censused matrix is emitted so a stable feed still yields a
-    non-trivial, hash-checked report."""
-    ev = _t(spark, sf_dir, "events")
-    first = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    ex = ev.select(
-        "event_type",
-        first.alias("_h1"),
-        F.explode(F.expr("json_object_keys(props)")).alias("key"),
-    )
-    agg = ex.groupBy("event_type", "key").agg(
-        F.max(F.when(F.col("_h1"), 1).otherwise(0)).alias("_f"),
-        F.max(F.when(~F.col("_h1"), 1).otherwise(0)).alias("_s"),
-    )
-    return agg.select(
-        "event_type", "key",
-        (F.col("_f") == 1).alias("in_first_half"),
-        (F.col("_s") == 1).alias("in_second_half"),
-        (F.col("_f") != F.col("_s")).alias("drifted"),
-    )
-
-
-SQL_PROPS_KEY_DRIFT = """
-WITH ex AS (
-  SELECT event_type,
-         epoch_us(ts) < 1705363200000000 AS h1,
-         unnest(json_keys(props)) AS key
-  FROM events
-),
-agg AS (
-  SELECT event_type, key,
-         MAX(CASE WHEN h1 THEN 1 ELSE 0 END) AS f,
-         MAX(CASE WHEN h1 THEN 0 ELSE 1 END) AS s
-  FROM ex GROUP BY 1, 2
-)
-SELECT event_type, key, f = 1 AS in_first_half, s = 1 AS in_second_half,
-       f <> s AS drifted
-FROM agg
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 43
-# Sweep-line concurrency, source-profile cosine map, rolling windowed
-# HLL, and a referential-integrity census.
-
-
-def q_concurrency_peak(spark, sf_dir):
-    """Peak concurrent sessions (operators/sessions.py:
-    concurrency_peak): 30-min session windows per user swept as
-    +1/-1 boundary events with a running sum — end-before-start tie
-    order so touching sessions don't overlap; argmax via one
-    struct-max fold."""
-    from ..operators.sessions import concurrency_peak
-
-    ev = _t(spark, sf_dir, "events")
-    sessions = ev.groupBy(
-        "user_id", F.session_window(F.col("ts"), "30 minutes").alias("w")
-    ).agg(F.count("*").alias("_n")).select(
-        F.lit("all").alias("scope"),
-        F.unix_micros(F.col("w.start").cast("timestamp")).alias("s_us"),
-        F.unix_micros(F.col("w.end").cast("timestamp")).alias("e_us"),
-    )
-    return concurrency_peak(sessions, "s_us", "e_us", group_col="scope")
-
-
-SQL_CONCURRENCY_PEAK = """
-WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-flagged AS (
-  SELECT user_id, tus,
-         CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id ORDER BY tus)
-                   >= 1800000000
-              OR lag(tus) OVER (PARTITION BY user_id ORDER BY tus) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-),
-sid AS (
-  SELECT user_id, tus,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-  FROM flagged
-),
-sess AS (
-  SELECT MIN(tus) AS s_us, MAX(tus) + 1800000000 AS e_us
-  FROM sid GROUP BY user_id, s
-),
-pts AS (
-  SELECT s_us AS t, 1 AS delta FROM sess
-  UNION ALL
-  SELECT e_us AS t, -1 AS delta FROM sess
-),
-run AS (
-  SELECT t, SUM(delta) OVER (ORDER BY t, delta
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         AS conc
-  FROM pts
-),
-agg AS (
-  SELECT COUNT(*) / 2 AS n_intervals,
-         MAX(struct_pack(c := conc, nt := -t)) AS m
-  FROM run
-)
-SELECT 'all' AS scope, CAST(n_intervals AS BIGINT) AS n_intervals,
-       m.c AS peak_concurrency, -m.nt AS peak_at
-FROM agg
-"""
-
 
 def q_source_cosine(spark, sf_dir):
     """Pairwise unigram-profile cosine between sources
@@ -8116,163 +5869,8 @@ FROM crossed JOIN norms na ON a = na.src JOIN norms nb ON b = nb.src
 """
 
 
-def q_rolling_users_hll(spark, sf_dir):
-    """Rolling 7-day distinct-user estimate from WINDOWED HyperLogLog
-    register merges (operators/sketches.py:hll_rolling_estimate) next
-    to the exact rolling distinct it approximates — the 'weekly active
-    users' dashboard at sketch cost: one 256-row register table per
-    day, max()-merged over a trailing calendar frame."""
-    from ..operators.sketches import hll_rolling_estimate
-
-    ev = _t(spark, sf_dir, "events")
-    est = hll_rolling_estimate(ev, "user_id", "ts", window_days=7)
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").cast("long")
-    ud = ev.select(day.alias("eday"), F.col("user_id")).distinct()
-    days = est.select("day")
-    exact = (
-        days.join(
-            ud,
-            (F.col("eday") >= F.col("day") - 6) & (F.col("eday") <= F.col("day")),
-        )
-        .groupBy("day")
-        .agg(F.count_distinct("user_id").alias("exact_distinct"))
-    )
-    return est.join(exact, "day").select(
-        "day", "hll_estimate", "exact_distinct",
-        F.round(
-            (F.col("hll_estimate") - F.col("exact_distinct").cast("double"))
-            / F.col("exact_distinct").cast("double"),
-            6,
-        ).alias("rel_error"),
-    )
-
-
-SQL_ROLLING_USERS_HLL = """
-WITH ev AS (
-  SELECT epoch_us(ts) // 86400000000 AS day,
-         CAST(user_id AS VARCHAR) AS v
-  FROM events
-),
-h AS (
-  SELECT day,
-         CAST('0x' || substr(md5('hl:' || v), 1, 8) AS BIGINT) AS hl,
-         CAST('0x' || substr(md5('hh:' || v), 1, 8) AS BIGINT) AS hh
-  FROM ev
-),
-r AS (SELECT day, hl & 255 AS idx, (hl >> 8) * 4294967296 + hh AS w FROM h),
-daily AS (
-  SELECT day, idx,
-         MAX(CASE WHEN w = 0 THEN 57 ELSE 57 - length(bin(w)) END) AS rho
-  FROM r GROUP BY 1, 2
-),
-span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
-grid AS (
-  SELECT gs.day, ix.idx
-  FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM span) gs
-  CROSS JOIN (SELECT DISTINCT idx FROM daily) ix
-),
-filled AS (
-  SELECT g.day, g.idx, d.rho
-  FROM grid g LEFT JOIN daily d ON g.day = d.day AND g.idx = d.idx
-),
-rolled AS (
-  SELECT day, idx,
-         MAX(rho) OVER (PARTITION BY idx ORDER BY day
-                        ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS rho
-  FROM filled
-),
-regs AS (SELECT day, idx, rho FROM rolled WHERE rho IS NOT NULL),
-s AS (
-  SELECT day, COUNT(*) AS n_present,
-         SUM(CAST((CAST(1 AS BIGINT) << CAST(57 - rho AS INT)) AS DECIMAL(38,0))) AS s_present
-  FROM regs GROUP BY 1
-),
-t AS (
-  SELECT day, 256 - n_present AS nz,
-         s_present + CAST(256 - n_present AS DECIMAL(38,0))
-                     * CAST(144115188075855872 AS DECIMAL(38,0)) AS s_total
-  FROM s
-),
-est AS (
-  SELECT day, nz, {HLLNUM} / CAST(s_total AS DOUBLE) AS raw FROM t
-),
-fin AS (
-  SELECT day,
-         round(CASE WHEN raw <= 640.0 AND nz > 0
-                    THEN 256.0 * ln(256.0 / CAST(nz AS DOUBLE))
-                    ELSE raw END, 4) AS hll_estimate
-  FROM est
-),
-ud AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS eday, user_id FROM events),
-exact AS (
-  SELECT f.day, COUNT(DISTINCT u.user_id) AS exact_distinct
-  FROM fin f JOIN ud u ON u.eday >= f.day - 6 AND u.eday <= f.day
-  GROUP BY 1
-)
-SELECT f.day, f.hll_estimate, e.exact_distinct,
-       round((f.hll_estimate - CAST(e.exact_distinct AS DOUBLE))
-             / CAST(e.exact_distinct AS DOUBLE), 6) AS rel_error
-FROM fin f JOIN exact e ON f.day = e.day
-"""
-
-
-SQL_ROLLING_USERS_HLL = SQL_ROLLING_USERS_HLL.replace("{HLLNUM}", _HLL_RAW_NUM)
-
-
-def q_fk_integrity(spark, sf_dir):
-    """Referential-integrity census over five warehouse FK edges:
-    (edge, n_child_rows, n_orphans) — the generalization of
-    j4_reconcile's single-pair audit to the whole schema; each edge is
-    one LEFT ANTI count against the parent's key projection (dims
-    broadcast; fact edges shuffle on the key)."""
-    edges = [
-        ("orders.custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
-        ("lineitem.orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem.partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-        ("customer.nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        ("supplier.nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
-    ]
-    outs = []
-    for label, child, ck, parent, pk in edges:
-        c = _t(spark, sf_dir, child).select(F.col(ck).alias("_k"))
-        p = _t(spark, sf_dir, parent).select(F.col(pk).alias("_k")).distinct()
-        orphans = c.join(p, "_k", "left_anti").agg(
-            F.count("*").alias("n_orphans")
-        )
-        total = c.agg(F.count("*").alias("n_child_rows"))
-        outs.append(
-            total.crossJoin(orphans).select(
-                F.lit(label).alias("edge"), "n_child_rows", "n_orphans"
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
-
-
-def _sql_fk_edge(label: str, child: str, ck: str, parent: str, pk: str) -> str:
-    return f"""
-SELECT '{label}' AS edge, COUNT(*) AS n_child_rows,
-       SUM(CASE WHEN p.{pk} IS NULL THEN 1 ELSE 0 END) AS n_orphans
-FROM {child} c LEFT JOIN (SELECT DISTINCT {pk} FROM {parent}) p
-ON c.{ck} = p.{pk}
-"""
-
-
-SQL_FK_INTEGRITY = "\nUNION ALL\n".join([
-    _sql_fk_edge("orders.custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
-    _sql_fk_edge("lineitem.orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-    _sql_fk_edge("lineitem.partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-    _sql_fk_edge("customer.nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-    _sql_fk_edge("supplier.nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
-])
-
-
-
 # ------------------------------------------------------------ round-5 batch 44
-# Homoglyph spoof census, day-of-week chi-square uniformity, measured
-# Bloom join pre-filter, and Neyman-optimal sample allocation.
+# Homoglyph spoof census and Neyman-optimal sample allocation.
 
 
 def q_homoglyph_spoof(spark, sf_dir):
@@ -8309,93 +5907,6 @@ SELECT source, COUNT(*) AS n_docs,
                            <> coalesce(text, '') THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 9) AS spoof_rate
 FROM staged GROUP BY source
-"""
-
-
-def q_dow_chi2(spark, sf_dir):
-    """Per-type day-of-week chi-square uniformity
-    (operators/sessions.py:dow_uniformity_chi2) — bot feeds are flat,
-    human traffic has weekly rhythm; the statistic is exact-integer up
-    to ONE terminal division ((7o-n)^2 form), day-of-week is integral
-    epoch-day arithmetic (no calendar/tz functions)."""
-    from ..operators.sessions import dow_uniformity_chi2
-
-    return dow_uniformity_chi2(_t(spark, sf_dir, "events"))
-
-
-SQL_DOW_CHI2 = """
-WITH cells AS (
-  SELECT event_type AS grp,
-         (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
-         COUNT(*) AS o
-  FROM events GROUP BY 1, 2
-),
-tot AS (SELECT grp, SUM(o) AS n FROM cells GROUP BY 1),
-j AS (
-  SELECT c.grp, t.n,
-         CAST(7 AS DECIMAL(19,0)) * CAST(c.o AS DECIMAL(18,0))
-         - CAST(t.n AS DECIMAL(37,0)) AS term
-  FROM cells c JOIN tot t ON c.grp = t.grp
-),
-agg AS (
-  SELECT grp, n,
-         SUM(CAST(CAST(term AS DECIMAL(19,0)) * CAST(term AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS num
-  FROM j GROUP BY 1, 2
-)
-SELECT grp AS event_type, n AS n_events,
-       round(CAST(num AS DOUBLE) / (7.0 * CAST(n AS DOUBLE)), 6) AS chi2,
-       round(CAST(num AS DOUBLE) / (7.0 * CAST(n AS DOUBLE)), 6) > 12.592
-         AS uniform_rejected
-FROM agg
-"""
-
-
-def q_bloom_prefilter_join(spark, sf_dir):
-    """The Bloom join pre-filter measured end-to-end
-    (operators/sketches.py:bloom_join_prefilter_report): filter over
-    the p_size < 15 part keys, lineitem passed through it — one row
-    quantifying pruning power and false passes (no false negatives by
-    construction)."""
-    from ..operators.sketches import bloom_join_prefilter_report
-
-    dim = _t(spark, sf_dir, "part").filter(F.col("p_size") < 15)
-    return bloom_join_prefilter_report(
-        _t(spark, sf_dir, "lineitem"), "l_partkey", dim, "p_partkey"
-    )
-
-
-SQL_BLOOM_PREFILTER_JOIN = """
-WITH dim AS (SELECT p_partkey FROM part WHERE p_size < 15),
-ks AS (SELECT unnest([0, 1, 2, 3]) AS k),
-bits AS (
-  SELECT DISTINCT
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':'
-                                 || CAST(p_partkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM dim CROSS JOIN ks
-),
-f AS (SELECT CAST(l_partkey AS VARCHAR) AS fk FROM lineitem),
-ex AS (
-  SELECT fk,
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':' || fk), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM (SELECT DISTINCT fk FROM f) CROSS JOIN ks
-),
-passed AS (
-  SELECT fk FROM ex JOIN bits USING (pos) GROUP BY fk HAVING COUNT(*) = 4
-),
-keys AS (SELECT DISTINCT CAST(p_partkey AS VARCHAR) AS fk FROM dim),
-m AS (
-  SELECT (SELECT COUNT(*) FROM f) AS n_fact_rows,
-         (SELECT COUNT(*) FROM f JOIN passed USING (fk)) AS n_pass_bloom,
-         (SELECT COUNT(*) FROM f JOIN keys USING (fk)) AS n_true_match
-)
-SELECT n_fact_rows, n_pass_bloom, n_true_match,
-       n_pass_bloom - n_true_match AS n_false_pass,
-       round(CAST(n_fact_rows - n_pass_bloom AS DOUBLE)
-             / CAST(n_fact_rows AS DOUBLE), 6) AS pruned_frac
-FROM m
 """
 
 
@@ -8437,10 +5948,9 @@ FROM w CROSS JOIN tot
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 45
-# Data-contract gate, mergeable log-bucket quantile sketch, HLL
-# set-overlap, and count-min as streaming state.
+# Data-contract gate, mergeable log-bucket quantile sketch, and
+# count-min as streaming state.
 
 
 def q_contract_checks(spark, sf_dir):
@@ -8549,86 +6059,6 @@ SELECT e.quantile, round(e.est, 6) AS est, round(x.exact, 6) AS exact,
        round(e.est / x.exact, 6) AS ratio
 FROM est e JOIN exact x ON e.quantile = x.quantile
 """
-
-
-def q_hll_overlap(spark, sf_dir):
-    """Distinct-user overlap between the two halves of the month by
-    HLL inclusion-exclusion (operators/sketches.py:hll_set_overlap):
-    |A∩B| from three 256-row register states, never joining the raw
-    sets; exact overlap alongside with the (error-amplifying)
-    subtraction's rel_error made visible."""
-    from ..operators.sketches import hll_set_overlap
-
-    ev = _t(spark, sf_dir, "events")
-    first = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    a = ev.filter(first).select("user_id")
-    b = ev.filter(~first).select("user_id")
-    return hll_set_overlap(a, b, "user_id")
-
-
-_SQL_HLL_EST_FRAGMENT = """
-  SELECT round(CASE WHEN raw <= 640.0 AND nz > 0
-               THEN 256.0 * ln(256.0 / CAST(nz AS DOUBLE))
-               ELSE raw END, 4) AS e
-  FROM (
-    SELECT nz, {num} / CAST(st AS DOUBLE) AS raw FROM (
-      SELECT 256 - COUNT(*) AS nz,
-             SUM(CAST((CAST(1 AS BIGINT) << CAST(57 - rho AS INT)) AS DECIMAL(38,0)))
-             + CAST(256 - COUNT(*) AS DECIMAL(38,0))
-               * CAST(144115188075855872 AS DECIMAL(38,0)) AS st
-      FROM {regs}
-    )
-  )
-"""
-
-
-def _sql_hll_overlap() -> str:
-    regs_tpl = """
-(SELECT idx, MAX(rho) AS rho FROM (
-  SELECT hl & 255 AS idx,
-         CASE WHEN (hl >> 8) * 4294967296 + hh = 0 THEN 57
-              ELSE 57 - length(bin((hl >> 8) * 4294967296 + hh)) END AS rho
-  FROM (
-    SELECT CAST('0x' || substr(md5('hl:' || v), 1, 8) AS BIGINT) AS hl,
-           CAST('0x' || substr(md5('hh:' || v), 1, 8) AS BIGINT) AS hh
-    FROM {src}
-  )
-) GROUP BY idx)"""
-    src_a = ("(SELECT CAST(user_id AS VARCHAR) AS v FROM events "
-             "WHERE epoch_us(ts) < 1705363200000000)")
-    src_b = ("(SELECT CAST(user_id AS VARCHAR) AS v FROM events "
-             "WHERE NOT (epoch_us(ts) < 1705363200000000))")
-    ra = regs_tpl.format(src=src_a)
-    rb = regs_tpl.format(src=src_b)
-    ru = f"""
-(SELECT idx, MAX(rho) AS rho FROM (
-  SELECT idx, rho FROM {ra} UNION ALL SELECT idx, rho FROM {rb}
-) GROUP BY idx)"""
-    ea = _SQL_HLL_EST_FRAGMENT.format(num=_HLL_RAW_NUM, regs=ra)
-    eb = _SQL_HLL_EST_FRAGMENT.format(num=_HLL_RAW_NUM, regs=rb)
-    eu = _SQL_HLL_EST_FRAGMENT.format(num=_HLL_RAW_NUM, regs=ru)
-    return f"""
-WITH ea AS ({ea}), eb AS ({eb}), eu AS ({eu}),
-exact AS (
-  SELECT COUNT(*) AS exact_overlap FROM (
-    SELECT DISTINCT user_id FROM events
-    WHERE epoch_us(ts) < 1705363200000000
-  ) a
-  WHERE EXISTS (
-    SELECT 1 FROM events b
-    WHERE NOT (epoch_us(b.ts) < 1705363200000000) AND b.user_id = a.user_id
-  )
-)
-SELECT ea.e AS est_a, eb.e AS est_b, eu.e AS est_union,
-       round(ea.e + eb.e - eu.e, 4) AS est_overlap,
-       exact_overlap,
-       round((round(ea.e + eb.e - eu.e, 4) - CAST(exact_overlap AS DOUBLE))
-             / greatest(CAST(exact_overlap AS DOUBLE), 1.0), 6) AS rel_error
-FROM ea CROSS JOIN eb CROSS JOIN eu CROSS JOIN exact
-"""
-
-
-SQL_HLL_OVERLAP = _sql_hll_overlap()
 
 
 def q_stream_cms(spark, sf_dir):
@@ -8751,79 +6181,7 @@ FROM est
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 46
-# Kaplan-Meier conversion survival, rank-biased overlap, keep-rate
-# two-proportion A/B test, and the vocabulary coverage curve.
-
-
-def q_km_conversion(spark, sf_dir):
-    """Kaplan-Meier click->purchase survival curve with right
-    censoring (operators/sessions.py:km_survival) — never-converting
-    users are censored at their last event, not dropped; log-space
-    cumulative product with rounded DECIMAL-summed terms."""
-    from ..operators.sessions import km_survival
-
-    return km_survival(_t(spark, sf_dir, "events"))
-
-
-SQL_KM_CONVERSION = """
-WITH e AS (
-  SELECT user_id AS u, event_type AS ty, epoch_us(ts) AS tus FROM events
-),
-carried AS (
-  SELECT u, ty, tus,
-         MIN(CASE WHEN ty = 'click' THEN tus END)
-           OVER (PARTITION BY u ORDER BY tus
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS entry
-  FROM e
-),
-per_user AS (
-  SELECT u,
-         MIN(CASE WHEN ty = 'click' THEN tus END) AS e0,
-         MIN(CASE WHEN ty = 'purchase' AND entry IS NOT NULL
-                   AND tus >= entry THEN tus END) AS ev,
-         MAX(tus) AS last
-  FROM carried GROUP BY u
-),
-durations AS (
-  SELECT CASE WHEN ev IS NOT NULL THEN ev - e0 ELSE last - e0 END AS dur_us,
-         ev IS NOT NULL AS converted
-  FROM per_user WHERE e0 IS NOT NULL
-),
-total AS (SELECT COUNT(*) AS n0 FROM durations),
-grid AS (
-  SELECT dur_us,
-         SUM(CASE WHEN converted THEN 1 ELSE 0 END) AS d,
-         COUNT(*) AS leave_n
-  FROM durations GROUP BY 1
-),
-staged AS (
-  SELECT dur_us, d,
-         n0 - coalesce(SUM(leave_n) OVER (ORDER BY dur_us
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS n_risk
-  FROM grid CROSS JOIN total
-),
-ev_only AS (SELECT * FROM staged WHERE d > 0),
-curve AS (
-  SELECT dur_us, d, n_risk,
-         SUM(CAST(CASE WHEN d < n_risk
-                  THEN round(ln(1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)), 9)
-                  ELSE 0.0 END AS DECIMAL(20,9)))
-           OVER (ORDER BY dur_us
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ls,
-         MAX(CASE WHEN d = n_risk THEN 1 ELSE 0 END)
-           OVER (ORDER BY dur_us
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead
-  FROM ev_only
-)
-SELECT CAST(dur_us AS DOUBLE) / 1e6 AS t_sec, n_risk, d AS n_events,
-       CASE WHEN dead = 1 THEN 0.0
-            ELSE round(exp(CAST(ls AS DOUBLE)), 6) END AS survival
-FROM curve
-"""
-
 
 def q_rbo_source_rankings(spark, sf_dir):
     """Rank-biased overlap between two source rankings — by document
@@ -9027,10 +6385,8 @@ FROM (
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 47
-# CDC changelog apply (MERGE semantics), watermark-lateness census,
-# and a strict three-step funnel.
+# CDC changelog apply (MERGE semantics).
 
 
 def q_cdc_docs(spark, sf_dir):
@@ -9113,90 +6469,8 @@ WHERE w IS NULL OR w.o <> 'D'
 """
 
 
-def q_late_census(spark, sf_dir):
-    """Watermark-tuning lateness census
-    (operators/sessions.py:lateness_census): events replayed in ingest
-    (event_id) order, lateness = running-max event time minus event
-    time, bucketed — including how many a 10-minute watermark would
-    DROP, read from batch data instead of production incidents."""
-    from ..operators.sessions import lateness_census
-
-    return lateness_census(_t(spark, sf_dir, "events"))
-
-
-SQL_LATE_CENSUS = """
-WITH e AS (
-  SELECT event_type AS grp, event_id AS aid, epoch_us(ts) AS tus FROM events
-),
-staged AS (
-  SELECT grp,
-         MAX(tus) OVER (PARTITION BY grp ORDER BY aid
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - tus AS late_us
-  FROM e
-)
-SELECT grp AS event_type, COUNT(*) AS n_events,
-       SUM(CASE WHEN late_us = 0 THEN 1 ELSE 0 END) AS n_on_time,
-       SUM(CASE WHEN late_us > 0 AND late_us <= 60000000 THEN 1 ELSE 0 END)
-         AS n_late_1m,
-       SUM(CASE WHEN late_us > 60000000 AND late_us <= 600000000
-                THEN 1 ELSE 0 END) AS n_late_10m,
-       SUM(CASE WHEN late_us > 600000000 THEN 1 ELSE 0 END) AS n_very_late,
-       SUM(CASE WHEN late_us > 600000000 THEN 1 ELSE 0 END)
-         AS n_dropped_at_watermark
-FROM staged GROUP BY grp
-"""
-
-
-def q_funnel3(spark, sf_dir):
-    """Strict view->click->purchase three-step funnel
-    (operators/sessions.py:funnel3_strict): greedy chained carries
-    (optimal for existence) over ONE user-key shuffle — never a 3-way
-    self-join; -1 sentinels, reached in {1,2,3}."""
-    from ..operators.sessions import funnel3_strict
-
-    return funnel3_strict(_t(spark, sf_dir, "events"))
-
-
-SQL_FUNNEL3 = """
-WITH e AS (
-  SELECT user_id AS u, event_id AS i, event_type AS ty, epoch_us(ts) AS tus
-  FROM events
-),
-e1 AS (
-  SELECT *, MIN(CASE WHEN ty = 'view' THEN tus END)
-              OVER (PARTITION BY u ORDER BY tus, i
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t1s
-  FROM e
-),
-e2 AS (
-  SELECT *, MIN(CASE WHEN ty = 'click' AND t1s IS NOT NULL AND tus >= t1s
-                     THEN tus END)
-              OVER (PARTITION BY u ORDER BY tus, i
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t2s
-  FROM e1
-),
-agg AS (
-  SELECT u,
-         MIN(CASE WHEN ty = 'view' THEN tus END) AS t1,
-         MIN(CASE WHEN ty = 'click' AND t1s IS NOT NULL AND tus >= t1s
-                  THEN tus END) AS t2,
-         MIN(CASE WHEN ty = 'purchase' AND t2s IS NOT NULL AND tus >= t2s
-                  THEN tus END) AS t3
-  FROM e2 GROUP BY u
-)
-SELECT u AS user_id, t1 AS t1_us,
-       coalesce(t2, -1) AS t2_us,
-       coalesce(t3, -1) AS t3_us,
-       1 + CAST(t2 IS NOT NULL AS INT) + CAST(t3 IS NOT NULL AS INT) AS reached
-FROM agg WHERE t1 IS NOT NULL
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 48
-# 1-D Wasserstein drift, per-doc novelty scoring, and lagged daily
-# cross-correlation.
+# 1-D Wasserstein drift and per-doc novelty scoring.
 
 
 def q_emd_length_drift(spark, sf_dir):
@@ -9293,59 +6567,8 @@ SELECT * FROM hi UNION ALL SELECT * FROM lo
 """
 
 
-def q_daily_xcorr(spark, sf_dir):
-    """Lagged cross-correlation of click vs purchase daily volumes,
-    lags -3..+3 (operators/sessions.py:daily_xcorr) — the lead/lag
-    discovery behind attribution; exact moment sums per lag over the
-    bounded matched-day table."""
-    from ..operators.sessions import daily_xcorr
-
-    return daily_xcorr(_t(spark, sf_dir, "events"))
-
-
-def _sql_daily_xcorr(max_lag: int = 3) -> str:
-    parts = []
-    for lag in range(-max_lag, max_lag + 1):
-        parts.append(f"""
-SELECT {lag} AS lag, nn AS n_days,
-       round(CASE WHEN CAST(nn AS DOUBLE) * sxx - sx * sx > 0
-                   AND CAST(nn AS DOUBLE) * syy - sy * sy > 0
-                  THEN (CAST(nn AS DOUBLE) * sxy - sx * sy)
-                       / (sqrt(CAST(nn AS DOUBLE) * sxx - sx * sx)
-                          * sqrt(CAST(nn AS DOUBLE) * syy - sy * sy))
-                  ELSE 0.0 END, 6) AS r
-FROM (
-  SELECT CAST(SUM(CAST(x AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(CAST(x AS DECIMAL(19,0)) * CAST(y AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS DOUBLE) AS syy,
-         COUNT(*) AS nn
-  FROM (
-    SELECT xx.x, yy.y FROM
-    (SELECT epoch_us(ts) // 86400000000 AS day, COUNT(*) AS x
-     FROM events WHERE event_type = 'click' GROUP BY 1) xx
-    JOIN
-    (SELECT epoch_us(ts) // 86400000000 - ({lag}) AS day, COUNT(*) AS y
-     FROM events WHERE event_type = 'purchase'
-     GROUP BY epoch_us(ts) // 86400000000) yy
-    ON xx.day = yy.day
-  )
-)
-""")
-    return "\nUNION ALL\n".join(parts)
-
-
-SQL_DAILY_XCORR = _sql_daily_xcorr(3)
-
-
-
 # ------------------------------------------------------------ round-5 batch 49
-# Church-Gale term adaptation, bigram conditional entropy, and RFM
-# segmentation.
+# Church-Gale term adaptation and bigram conditional entropy.
 
 
 def q_term_adaptation(spark, sf_dir):
@@ -9420,40 +6643,8 @@ FROM hxy JOIN hx ON hxy.g = hx.g JOIN tot ON hxy.g = tot.g
 """
 
 
-def q_rfm_segments(spark, sf_dir):
-    """RFM quintile segmentation census over users
-    (operators/sessions.py:rfm_segments) — the engagement-triage cube;
-    ntile ranks over the bounded user-grain table with explicit
-    tie-breaks, census bounded at 125 cells."""
-    from ..operators.sessions import rfm_segments
-
-    return rfm_segments(_t(spark, sf_dir, "events"))
-
-
-SQL_RFM_SEGMENTS = """
-WITH per_user AS (
-  SELECT user_id AS u, MAX(epoch_us(ts)) AS last_us, COUNT(*) AS freq,
-         SUM(CAST(value AS DECIMAL(20,6))) AS money
-  FROM events GROUP BY 1
-),
-scored AS (
-  SELECT u, money,
-         ntile(5) OVER (ORDER BY last_us, u) AS r,
-         ntile(5) OVER (ORDER BY freq, u) AS f,
-         ntile(5) OVER (ORDER BY money, u) AS m
-  FROM per_user
-)
-SELECT r, f, m, COUNT(*) AS n_users,
-       round(CAST(SUM(money) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-         AS mean_monetary
-FROM scored GROUP BY 1, 2, 3
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 50
-# Per-node local clustering and the Markov stationary distribution of
-# the event chain.
+# Per-node local clustering.
 
 
 def q_local_clustering(spark, sf_dir):
@@ -9511,269 +6702,6 @@ SELECT node, degree, n_triangles, clustering FROM (
   FROM scored
 ) WHERE rk <= 20
 """
-
-
-def q_event_stationary(spark, sf_dir):
-    """Stationary distribution of the first-order event-type chain
-    (operators/graph.py:markov_stationary, 4 power-iteration rounds at
-    1e6 integer fixed point) next to the EMPIRICAL event mix —
-    divergence flags a non-stationary window the transition matrix
-    alone can't show. Transitions come from per-user lag pairs (the
-    a25 construction)."""
-    from ..operators.graph import markov_stationary
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros(F.col("ts").cast("timestamp")), F.col("event_id")
-    )
-    pairs = ev.select(
-        F.lag("event_type").over(w).alias("prev"),
-        F.col("event_type").alias("cur"),
-    ).filter(F.col("prev").isNotNull())
-    stat = markov_stationary(pairs)
-    emp = ev.groupBy(F.col("event_type").alias("state")).agg(
-        F.count("*").alias("_c")
-    )
-    tot = emp.agg(F.sum("_c").alias("_t"))
-    emp_share = emp.crossJoin(F.broadcast(tot)).select(
-        "state",
-        F.round(
-            F.col("_c").cast("double") / F.col("_t").cast("double"), 6
-        ).alias("empirical_share"),
-    )
-    return stat.join(emp_share, "state").select(
-        "state", "stationary_share", "empirical_share",
-        F.round(
-            F.col("stationary_share") - F.col("empirical_share"), 6
-        ).alias("delta"),
-    )
-
-
-def _sql_event_stationary(n_iter: int = 4) -> str:
-    scale = 10 ** 6
-    parts = [f"""
-WITH ev AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events
-),
-pairs AS (
-  SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY tus, event_id)
-           AS prev,
-         event_type AS cur
-  FROM ev
-),
-c AS (
-  SELECT prev AS i, cur AS j, COUNT(*) AS cij
-  FROM pairs WHERE prev IS NOT NULL GROUP BY 1, 2
-),
-rowsum AS (SELECT i, SUM(cij) AS ci FROM c GROUP BY 1),
-trans AS (SELECT c.i, c.j, c.cij, r.ci FROM c JOIN rowsum r ON c.i = r.i),
-states AS (
-  SELECT DISTINCT s FROM (
-    SELECT prev AS s FROM pairs WHERE prev IS NOT NULL
-    UNION SELECT cur FROM pairs WHERE prev IS NOT NULL
-  )
-),
-ns AS (SELECT COUNT(*) AS n FROM states),
-p0 AS (
-  SELECT s, ({scale} * 2 + n) // (n * 2) AS p FROM states CROSS JOIN ns
-)"""]
-    prev = "p0"
-    for k in range(1, n_iter + 1):
-        parts.append(f""",
-p{k} AS (
-  SELECT s, SUM(fl) AS p FROM (
-    SELECT t.j AS s, (2 * r.p * t.cij + t.ci) // (2 * t.ci) AS fl
-    FROM trans t JOIN {prev} r ON t.i = r.s
-    UNION ALL
-    SELECT r.s, r.p FROM {prev} r
-    WHERE NOT EXISTS (SELECT 1 FROM rowsum w WHERE w.i = r.s)
-  ) GROUP BY s
-)""")
-        prev = f"p{k}"
-    parts.append(f""",
-emp AS (
-  SELECT event_type AS state, COUNT(*) AS cc FROM events GROUP BY 1
-),
-tot AS (SELECT SUM(cc) AS t FROM emp)
-SELECT st.s AS state,
-       round(CAST(st.p AS DOUBLE) / {float(scale)}, 6) AS stationary_share,
-       round(CAST(e.cc AS DOUBLE) / CAST(t.t AS DOUBLE), 6) AS empirical_share,
-       round(round(CAST(st.p AS DOUBLE) / {float(scale)}, 6)
-             - round(CAST(e.cc AS DOUBLE) / CAST(t.t AS DOUBLE), 6), 6) AS delta
-FROM {prev} st JOIN emp e ON st.s = e.state CROSS JOIN tot t
-""")
-    return "".join(parts)
-
-
-SQL_EVENT_STATIONARY = _sql_event_stationary(4)
-
-
-
-# ------------------------------------------------------------ round-5 batch 51
-# Session entry/exit flow, inter-arrival quantiles, and an order-status
-# consistency audit.
-
-
-def q_session_entry_exit(spark, sf_dir):
-    """Session ENTRY -> EXIT type flow census: per 30-min user session,
-    the first and last event types, folded to the bounded (entry, exit)
-    matrix — the landing/abandonment flow report behind a25's
-    step-to-step transitions. One user-key shuffle; per-session
-    endpoints via min/max over the zero-padded (tus|event_id) key (the
-    a24 argmin/argmax discipline — no window beyond the session id)."""
-    ev = _t(spark, sf_dir, "events")
-    tus = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-    e = ev.select("user_id", "event_id", "event_type", tus.alias("tus"))
-    prev = F.lag("tus").over(w)
-    flagged = e.withColumn(
-        "_new",
-        F.when(prev.isNull() | ((F.col("tus") - prev) > 1800 * 1_000_000), 1)
-        .otherwise(0),
-    )
-    sid = flagged.withColumn(
-        "_sid", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    key = F.concat(
-        F.lpad(F.col("tus").cast("string"), 20, "0"), F.lit("|"),
-        F.lpad(F.col("event_id").cast("string"), 20, "0"),
-    )
-    per_sess = sid.groupBy("user_id", "_sid").agg(
-        F.min_by("event_type", key).alias("entry_type"),
-        F.max_by("event_type", key).alias("exit_type"),
-    )
-    return per_sess.groupBy("entry_type", "exit_type").agg(
-        F.count("*").alias("n_sessions")
-    )
-
-
-SQL_SESSION_ENTRY_EXIT = """
-WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN lag(tus) OVER w IS NULL
-                  OR tus - lag(tus) OVER w > 1800000000
-                 THEN 1 ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)
-),
-sid AS (
-  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS s
-  FROM flagged
-),
-keyed AS (
-  SELECT user_id, s, event_type,
-         lpad(CAST(tus AS VARCHAR), 20, '0') || '|'
-           || lpad(CAST(event_id AS VARCHAR), 20, '0') AS k
-  FROM sid
-),
-per_sess AS (
-  SELECT arg_min(event_type, k) AS entry_type,
-         arg_max(event_type, k) AS exit_type
-  FROM keyed GROUP BY user_id, s
-)
-SELECT entry_type, exit_type, COUNT(*) AS n_sessions
-FROM per_sess GROUP BY 1, 2
-"""
-
-
-def q_interarrival_quantiles(spark, sf_dir):
-    """Per-type inter-event arrival-gap quantiles (p50/p90/p99 seconds)
-    over the exact value-compressed histogram (the a6 machinery —
-    bounded aggregation state where built-in percentile buffers every
-    value) — the feed-cadence profile next to spike/CUSUM health
-    signals. Gaps are integral-second lags within each type's time
-    order."""
-    from ..operators.textstats import exact_quantiles_histogram
-
-    ev = _t(spark, sf_dir, "events")
-    tus = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("event_type").orderBy("tus", "event_id")
-    gaps = (
-        ev.select("event_type", "event_id", tus.alias("tus"))
-        .withColumn("_gap", F.col("tus") - F.lag("tus").over(w))
-        .filter(F.col("_gap").isNotNull())
-        .select(
-            F.col("event_type").alias("g"),
-            F.expr("_gap DIV 1000000").alias("v"),
-        )
-    )
-    out = exact_quantiles_histogram(gaps, (0.5, 0.9, 0.99))
-    return out.select(
-        F.col("g").alias("event_type"),
-        F.col("p50").alias("p50_sec"),
-        F.col("p90").alias("p90_sec"),
-        F.col("p99").alias("p99_sec"),
-    )
-
-
-SQL_INTERARRIVAL_QUANTILES = """
-WITH e AS (
-  SELECT event_type, event_id, epoch_us(ts) AS tus FROM events
-),
-gaps AS (
-  SELECT event_type AS g,
-         (tus - lag(tus) OVER (PARTITION BY event_type
-                               ORDER BY tus, event_id)) // 1000000 AS v
-  FROM e
-)
-SELECT g AS event_type,
-       round(quantile_cont(v, 0.5), 6) AS p50_sec,
-       round(quantile_cont(v, 0.9), 6) AS p90_sec,
-       round(quantile_cont(v, 0.99), 6) AS p99_sec
-FROM gaps WHERE v IS NOT NULL GROUP BY 1
-"""
-
-
-def q_order_status_audit(spark, sf_dir):
-    """Order-status consistency audit: per o_orderstatus, orders whose
-    lineitem statuses CONTRADICT it ('F' with any open item, 'O' with
-    every item finished) — the cross-table business-rule census
-    (fd_violations checks within one table; this checks the
-    TPC-H-semantic invariant across the join). One order-grain fold of
-    lineitem (map-side combinable), broadcast-free key join, bounded
-    final census."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    per_order = li.groupBy(F.col("l_orderkey").alias("o_orderkey")).agg(
-        F.count("*").alias("_n_items"),
-        F.sum(F.when(F.col("l_linestatus") == "O", 1).otherwise(0)).alias("_n_open"),
-    )
-    j = o.join(per_order, "o_orderkey", "left")
-    bad = (
-        ((F.col("o_orderstatus") == "F") & (F.coalesce(F.col("_n_open"), F.lit(0)) > 0))
-        | ((F.col("o_orderstatus") == "O")
-           & F.col("_n_items").isNotNull()
-           & (F.col("_n_open") == 0))
-    )
-    return j.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.when(F.col("_n_items").isNull(), 1).otherwise(0)).alias("n_no_items"),
-        F.sum(F.when(bad, 1).otherwise(0)).alias("n_inconsistent"),
-    )
-
-
-SQL_ORDER_STATUS_AUDIT = """
-WITH per_order AS (
-  SELECT l_orderkey AS o_orderkey, COUNT(*) AS n_items,
-         SUM(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS n_open
-  FROM lineitem GROUP BY 1
-),
-j AS (
-  SELECT o.o_orderstatus, p.n_items, p.n_open
-  FROM orders o LEFT JOIN per_order p ON o.o_orderkey = p.o_orderkey
-)
-SELECT o_orderstatus, COUNT(*) AS n_orders,
-       SUM(CASE WHEN n_items IS NULL THEN 1 ELSE 0 END) AS n_no_items,
-       SUM(CASE WHEN (o_orderstatus = 'F' AND coalesce(n_open, 0) > 0)
-                  OR (o_orderstatus = 'O' AND n_items IS NOT NULL
-                      AND n_open = 0)
-                THEN 1 ELSE 0 END) AS n_inconsistent
-FROM j GROUP BY 1
-"""
-
 
 
 # ------------------------------------------------------------ round-5 batch 52
@@ -9851,7 +6779,6 @@ best AS (
 SELECT t AS true_label, cl AS pred_label, COUNT(*) AS n
 FROM best WHERE rk = 1 GROUP BY 1, 2
 """
-
 
 
 # ------------------------------------------------------------ round-5 batch 53
@@ -10005,10 +6932,8 @@ GROUP BY 1, 2, 3
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 54
-# Recency-decayed trending terms, naive-seasonal forecast error (MASE),
-# and the vocabulary growth curve.
+# Recency-decayed trending terms and the vocabulary growth curve.
 
 
 def q_trending_terms(spark, sf_dir):
@@ -10043,10 +6968,7 @@ def q_trending_terms(spark, sf_dir):
         "term", "raw_cnt",
         F.round(F.col("_dec").cast("double"), 6).alias("decayed_score"),
     )
-    w = Window.orderBy(F.desc("decayed_score"), F.asc("term"))
-    return scored.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= 10
-    ).select("term", "raw_cnt", "decayed_score")
+    return scored.orderBy(F.desc("decayed_score"), F.asc("term")).limit(10)
 
 
 SQL_TRENDING_TERMS = f"""
@@ -10065,75 +6987,6 @@ SELECT term, raw_cnt, decayed_score FROM (
   SELECT *, row_number() OVER (ORDER BY decayed_score DESC, term) AS rk
   FROM scored
 ) WHERE rk <= 10
-"""
-
-
-def q_mase_forecast(spark, sf_dir):
-    """Per-type MASE of the seasonal-naive lag-7 forecast on daily
-    volumes: MAE(lag-7 forecast) / MAE(lag-1 naive) — the standard
-    scale-free forecastability score (MASE < 1: weekly seasonality
-    beats the random walk — the series is schedulable). Absolute
-    errors are exact integers summed as DECIMAL; one terminal
-    division; both MAEs share the day table."""
-    ev = _t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").cast("long")
-    daily = ev.groupBy(F.col("event_type").alias("grp"), day.alias("day")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.partitionBy("grp").orderBy("day")
-    staged = daily.select(
-        "grp", "day", "c",
-        F.lag("c", 7).over(w).alias("_l7"),
-        F.lag("c", 1).over(w).alias("_l1"),
-    )
-    agg = staged.groupBy("grp").agg(
-        F.sum(
-            F.when(F.col("_l7").isNotNull(),
-                   F.abs(F.col("c") - F.col("_l7")).cast("decimal(38,0)"))
-        ).alias("_e7"),
-        F.sum(F.when(F.col("_l7").isNotNull(), 1).otherwise(0)).alias("_n7"),
-        F.sum(
-            F.when(F.col("_l1").isNotNull(),
-                   F.abs(F.col("c") - F.col("_l1")).cast("decimal(38,0)"))
-        ).alias("_e1"),
-        F.sum(F.when(F.col("_l1").isNotNull(), 1).otherwise(0)).alias("_n1"),
-    )
-    mase = (
-        (F.col("_e7").cast("double") / F.col("_n7").cast("double"))
-        / (F.col("_e1").cast("double") / F.col("_n1").cast("double"))
-    )
-    return agg.filter((F.col("_n7") > 0) & (F.col("_e1") > 0)).select(
-        F.col("grp").alias("event_type"),
-        F.col("_n7").alias("n_forecast_days"),
-        F.round(mase, 6).alias("mase"),
-    )
-
-
-SQL_MASE_FORECAST = """
-WITH daily AS (
-  SELECT event_type AS grp, epoch_us(ts) // 86400000000 AS day, COUNT(*) AS c
-  FROM events GROUP BY 1, 2
-),
-staged AS (
-  SELECT grp, day, c,
-         lag(c, 7) OVER (PARTITION BY grp ORDER BY day) AS l7,
-         lag(c, 1) OVER (PARTITION BY grp ORDER BY day) AS l1
-  FROM daily
-),
-agg AS (
-  SELECT grp,
-         SUM(CASE WHEN l7 IS NOT NULL
-                  THEN CAST(abs(c - l7) AS DECIMAL(38,0)) END) AS e7,
-         SUM(CASE WHEN l7 IS NOT NULL THEN 1 ELSE 0 END) AS n7,
-         SUM(CASE WHEN l1 IS NOT NULL
-                  THEN CAST(abs(c - l1) AS DECIMAL(38,0)) END) AS e1,
-         SUM(CASE WHEN l1 IS NOT NULL THEN 1 ELSE 0 END) AS n1
-  FROM staged GROUP BY 1
-)
-SELECT grp AS event_type, n7 AS n_forecast_days,
-       round((CAST(e7 AS DOUBLE) / CAST(n7 AS DOUBLE))
-             / (CAST(e1 AS DOUBLE) / CAST(n1 AS DOUBLE)), 6) AS mase
-FROM agg WHERE n7 > 0 AND e1 > 0
 """
 
 
@@ -10183,7 +7036,6 @@ SELECT day, n_new_terms,
          AS cum_vocab
 FROM per_day
 """
-
 
 
 # ------------------------------------------------------------ round-5 batch 55
@@ -10355,259 +7207,7 @@ SELECT n_versions, COUNT(*) AS n_pages FROM per_page GROUP BY 1
 """
 
 
-
-# ------------------------------------------------------------ round-5 batch 56
-# Shuffle-skew audit and per-quantile drift table.
-
-
-def q_skew_audit(spark, sf_dir):
-    """Pre-shuffle SKEW AUDIT for a join key: simulate the P=32
-    partition assignment with an md5-derived bucket (Spark's internal
-    hash is not engine-portable; md5 is) over lineitem.l_orderkey and
-    report the partition-occupancy distribution — (n_partitions,
-    max_rows, min_rows, median_rows, skew_ratio) — the number a plan
-    review reads BEFORE a 100 TB shuffle ships: a skew_ratio near 1
-    means AQE has nothing to fix; >>1 names the hot key problem.
-    All-integer occupancy; the median comes from the bounded 32-row
-    occupancy table."""
-    li = _t(spark, sf_dir, "lineitem")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 15),
-               16, 10).cast("long"),
-        F.lit(32),
-    )
-    occ = li.groupBy(bucket.alias("p")).agg(F.count("*").alias("rows"))
-    w = Window.orderBy("rows", "p")
-    ranked = occ.withColumn("_rk", F.row_number().over(w)).withColumn(
-        "_n", F.count("*").over(Window.partitionBy(F.lit(1)))
-    )
-    med = ranked.filter(
-        (F.col("_rk") == F.expr("(_n + 1) DIV 2"))
-    ).select(F.col("rows").alias("median_rows"))
-    agg = occ.agg(
-        F.count("*").alias("n_partitions"),
-        F.max("rows").alias("max_rows"),
-        F.min("rows").alias("min_rows"),
-    )
-    return agg.crossJoin(F.broadcast(med)).select(
-        "n_partitions", "max_rows", "min_rows", "median_rows",
-        F.round(
-            F.col("max_rows").cast("double") / F.col("median_rows").cast("double"),
-            6,
-        ).alias("skew_ratio"),
-    )
-
-
-SQL_SKEW_AUDIT = """
-WITH occ AS (
-  SELECT CAST('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15) AS BIGINT)
-         % 32 AS p,
-         COUNT(*) AS rows_n
-  FROM lineitem GROUP BY 1
-),
-ranked AS (
-  SELECT rows_n, row_number() OVER (ORDER BY rows_n, p) AS rk,
-         COUNT(*) OVER () AS n
-  FROM occ
-),
-med AS (SELECT rows_n AS median_rows FROM ranked WHERE rk = (n + 1) // 2)
-SELECT (SELECT COUNT(*) FROM occ) AS n_partitions,
-       (SELECT MAX(rows_n) FROM occ) AS max_rows,
-       (SELECT MIN(rows_n) FROM occ) AS min_rows,
-       median_rows,
-       round(CAST((SELECT MAX(rows_n) FROM occ) AS DOUBLE)
-             / CAST(median_rows AS DOUBLE), 6) AS skew_ratio
-FROM med
-"""
-
-
-def q_qq_shift(spark, sf_dir):
-    """Per-quantile drift table: p10..p90 of events.value in the first
-    vs second half of the month, with deltas — the readable
-    complement to KS (max deviation) and EMD (mass distance): WHICH
-    quantiles moved, and by how much. Exact type-7 quantiles over the
-    value-compressed histogram on both sides (values pre-rounded to
-    2 dp so the histogram key set stays bounded)."""
-    from ..operators.textstats import exact_quantiles_histogram
-
-    ev = _t(spark, sf_dir, "events")
-    first = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    # centi-units via an explicit round BEFORE the integer cast: a bare
-    # double->long cast TRUNCATES in Spark but ROUNDS in DuckDB
-    gv = ev.select(
-        F.when(first, F.lit("h1")).otherwise(F.lit("h2")).alias("g"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-    )
-    qs = (0.1, 0.25, 0.5, 0.75, 0.9)
-    out = exact_quantiles_histogram(gv, qs)
-    h1 = out.filter(F.col("g") == "h1").drop("g")
-    h2 = out.filter(F.col("g") == "h2").drop("g")
-    cols = [f"p{int(p * 100)}" for p in qs]
-    rows = []
-    for c in cols:
-        rows.append(
-            h1.select(
-                F.lit(c).alias("quantile"),
-                (F.col(c) / 100.0).alias("h1_value"),
-            ).crossJoin(
-                h2.select((F.col(c) / 100.0).alias("h2_value"))
-            )
-        )
-    res = rows[0]
-    for r in rows[1:]:
-        res = res.unionByName(r)
-    return res.select(
-        "quantile",
-        F.round("h1_value", 6).alias("h1_value"),
-        F.round("h2_value", 6).alias("h2_value"),
-        F.round(F.col("h2_value") - F.col("h1_value"), 6).alias("delta"),
-    )
-
-
-def _sql_qq_shift() -> str:
-    qs = [(10, 0.1), (25, 0.25), (50, 0.5), (75, 0.75), (90, 0.9)]
-    parts = []
-    for tag, p in qs:
-        parts.append(f"""
-SELECT 'p{tag}' AS quantile,
-       round(h1 / 100.0, 6) AS h1_value,
-       round(h2 / 100.0, 6) AS h2_value,
-       round(h2 / 100.0 - h1 / 100.0, 6) AS delta
-FROM (
-  SELECT (SELECT quantile_cont(v, {p}) FROM vals WHERE g = 'h1') AS h1,
-         (SELECT quantile_cont(v, {p}) FROM vals WHERE g = 'h2') AS h2
-)""")
-    body = "\nUNION ALL\n".join(parts)
-    return f"""
-WITH vals AS (
-  SELECT CASE WHEN epoch_us(ts) < 1705363200000000 THEN 'h1' ELSE 'h2' END AS g,
-         CAST(round(value * 100) AS BIGINT) AS v
-  FROM events
-)
-{body}
-"""
-
-
-SQL_QQ_SHIFT = _sql_qq_shift()
-
-
-
 # ------------------------------------------------------------ round-5 batch 57
-# Consistent-hash ring assignment and discriminative keep/drop
-# vocabulary.
-
-
-def q_consistent_hash(spark, sf_dir):
-    """Consistent-hashing ring vs naive mod-N, measured: assign every
-    customer key to 8 shards both ways, then grow to 9 shards and
-    count how many keys MOVE — the ring's whole point (≈1/(N+1) of
-    keys move vs ≈N/(N+1) under mod). Returns one row per scheme:
-    (scheme, n_keys, n_moved, moved_frac).
-
-    Ring construction, fully relational: each shard owns 16 md5-derived
-    virtual points; a key maps to the nearest point CLOCKWISE (the
-    smallest vnode position >= key position, wrapping to the global
-    minimum) — the wrap and the argmin are min() folds over the
-    BROADCAST vnode table (shards x 16 rows), never a sort of the key
-    space. Everything is exact 60-bit integer arithmetic."""
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").cast("string").alias("k")
-    )
-    h = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
-    keys = cust.select("k", h(F.concat(F.lit("key:"), F.col("k"))).alias("kp"))
-
-    def ring_assign(n_shards):
-        spark_ = cust.sparkSession
-        vn = spark_.range(n_shards).select(F.col("id").alias("shard")).crossJoin(
-            spark_.range(16).select(F.col("id").alias("v"))
-        ).select(
-            "shard",
-            h(F.concat(F.lit("vn:"), F.col("shard").cast("string"),
-                       F.lit(":"), F.col("v").cast("string"))).alias("vp"),
-        )
-        # nearest clockwise vnode: min vp >= kp, else global min (wrap)
-        j = keys.crossJoin(F.broadcast(vn))
-        cand = j.groupBy("k", "kp").agg(
-            F.min(F.when(F.col("vp") >= F.col("kp"),
-                         F.struct("vp", "shard"))).alias("_ge"),
-            F.min(F.struct("vp", "shard")).alias("_wrap"),
-        )
-        return cand.select(
-            "k",
-            F.coalesce(F.col("_ge.shard"), F.col("_wrap.shard")).alias("shard"),
-        )
-
-    r8 = ring_assign(8).withColumnRenamed("shard", "s8")
-    r9 = ring_assign(9).withColumnRenamed("shard", "s9")
-    ring_moved = r8.join(r9, "k").agg(
-        F.lit("ring").alias("scheme"),
-        F.count("*").alias("n_keys"),
-        F.sum(F.when(F.col("s8") != F.col("s9"), 1).otherwise(0)).alias("n_moved"),
-    )
-    mod_moved = keys.agg(
-        F.lit("mod").alias("scheme"),
-        F.count("*").alias("n_keys"),
-        F.sum(
-            F.when(F.pmod(F.col("kp"), F.lit(8)) != F.pmod(F.col("kp"), F.lit(9)),
-                   1).otherwise(0)
-        ).alias("n_moved"),
-    )
-    return ring_moved.unionByName(mod_moved).select(
-        "scheme", "n_keys", "n_moved",
-        F.round(
-            F.col("n_moved").cast("double") / F.col("n_keys").cast("double"), 6
-        ).alias("moved_frac"),
-    )
-
-
-def _sql_ring(n_shards: int) -> str:
-    return f"""
-  SELECT k.k, coalesce(
-           (SELECT min(struct_pack(vp := v.vp, shard := v.shard))
-            FROM vn{n_shards} v WHERE v.vp >= k.kp).shard,
-           (SELECT min(struct_pack(vp := v.vp, shard := v.shard))
-            FROM vn{n_shards} v).shard) AS shard
-  FROM keys k"""
-
-
-SQL_CONSISTENT_HASH = f"""
-WITH keys AS (
-  SELECT CAST(c_custkey AS VARCHAR) AS k,
-         CAST('0x' || substr(md5('key:' || CAST(c_custkey AS VARCHAR)), 1, 15)
-              AS BIGINT) AS kp
-  FROM customer
-),
-vn8 AS (
-  SELECT s.shard, v.v,
-         CAST('0x' || substr(md5('vn:' || CAST(s.shard AS VARCHAR) || ':'
-                                 || CAST(v.v AS VARCHAR)), 1, 15) AS BIGINT) AS vp
-  FROM (SELECT unnest(generate_series(0, 7)) AS shard) s
-  CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS v) v
-),
-vn9 AS (
-  SELECT s.shard, v.v,
-         CAST('0x' || substr(md5('vn:' || CAST(s.shard AS VARCHAR) || ':'
-                                 || CAST(v.v AS VARCHAR)), 1, 15) AS BIGINT) AS vp
-  FROM (SELECT unnest(generate_series(0, 8)) AS shard) s
-  CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS v) v
-),
-r8 AS ({_sql_ring(8)}),
-r9 AS ({_sql_ring(9)}),
-ring AS (
-  SELECT 'ring' AS scheme, COUNT(*) AS n_keys,
-         SUM(CASE WHEN r8.shard <> r9.shard THEN 1 ELSE 0 END) AS n_moved
-  FROM r8 JOIN r9 ON r8.k = r9.k
-),
-modm AS (
-  SELECT 'mod' AS scheme, COUNT(*) AS n_keys,
-         SUM(CASE WHEN kp % 8 <> kp % 9 THEN 1 ELSE 0 END) AS n_moved
-  FROM keys
-)
-SELECT scheme, n_keys, n_moved,
-       round(CAST(n_moved AS DOUBLE) / CAST(n_keys AS DOUBLE), 6) AS moved_frac
-FROM (SELECT * FROM ring UNION ALL SELECT * FROM modm)
-"""
-
 
 def q_keep_discriminative_terms(spark, sf_dir):
     """Discriminative keep/drop vocabulary: the 10 terms most
@@ -10760,7 +7360,7 @@ def q_theta_vocab_overlap(spark, sf_dir):
     """Vocabulary overlap between the even- and odd-doc_id halves of the
     corpus by intersecting two coordinated theta samples
     (operators/sketches.py:theta_set_overlap) — the set-algebra query
-    HLL answers only by inclusion-exclusion (hll_overlap): because both
+    HLL answers only by inclusion-exclusion: because both
     halves keep exactly the terms hashing below the SAME threshold,
     sample(A) ∩ sample(B) IS sample(A∩B) — a set identity — so the
     intersection error scales with the overlap itself, not with the
@@ -11399,72 +7999,6 @@ FROM tgt JOIN hist ON idx >= lo AND idx <= hi
 """
 
 
-def q_dow_seasonal_anomaly(spark, sf_dir):
-    """Day-of-week-adjusted robust anomaly detection over the events
-    stream: per-day counts, the per-dow exact median as the seasonal
-    baseline, and a 3-MAD flag on the residuals — the robust STL-lite
-    that catches a quiet Tuesday a raw rolling z-score (spike_zscore)
-    would call normal and a uniformity test (dow_chi2) can't localize.
-    Medians ride the value-compressed exact-histogram helper (bounded
-    state); residuals are rounded to 6 dp BEFORE the MAD pass so both
-    engines take the median of identical values; dow is integral
-    epoch-day mod 7 (no calendar semantics)."""
-    from ..operators.textstats import exact_quantiles_histogram
-
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.select(F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-                  .alias("day"))
-        .groupBy("day").agg(F.count("*").alias("n_events"))
-        .withColumn("dow", F.pmod(F.col("day"), F.lit(7)))
-    )
-    med = exact_quantiles_histogram(
-        daily.select(F.col("dow").alias("g"),
-                     F.col("n_events").cast("double").alias("v")),
-        (0.5,),
-    ).select(F.col("g").alias("dow"), F.col("p50").alias("dow_median"))
-    resid = daily.join(med, "dow").withColumn(
-        "resid",
-        F.round(F.col("n_events").cast("double") - F.col("dow_median"), 6),
-    )
-    mad = exact_quantiles_histogram(
-        resid.select(F.lit(0).alias("g"), F.abs(F.col("resid")).alias("v")),
-        (0.5,),
-    ).select(F.col("p50").alias("mad"))
-    return (
-        resid.crossJoin(F.broadcast(mad))
-        .select(
-            "day", "dow", "n_events", "dow_median", "resid",
-            (F.abs(F.col("resid")) > F.lit(3.0) * F.col("mad"))
-            .alias("is_anomaly"),
-        )
-    )
-
-
-SQL_DOW_SEASONAL_ANOMALY = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-         COUNT(*) AS n_events
-  FROM events GROUP BY 1
-),
-d2 AS (SELECT day, n_events, day % 7 AS dow FROM daily),
-med AS (
-  SELECT dow, round(quantile_cont(CAST(n_events AS DOUBLE), 0.5), 6)
-           AS dow_median
-  FROM d2 GROUP BY dow
-),
-resid AS (
-  SELECT d2.day, d2.dow, d2.n_events, med.dow_median,
-         round(CAST(d2.n_events AS DOUBLE) - med.dow_median, 6) AS resid
-  FROM d2 JOIN med USING (dow)
-),
-mad AS (SELECT round(quantile_cont(abs(resid), 0.5), 6) AS mad FROM resid)
-SELECT day, dow, n_events, dow_median, resid,
-       abs(resid) > 3.0 * mad AS is_anomaly
-FROM resid CROSS JOIN mad
-"""
-
-
 def q_dsir_weights(spark, sf_dir):
     """DSIR importance weights toward the English slice
     (operators/curation.py:dsir_weights): hashed-unigram log-ratio
@@ -11916,215 +8450,6 @@ UNION ALL
 SELECT 4 AS step, doc_id, qs AS qsim, sc AS mmr_score FROM sel4
 UNION ALL
 SELECT 5 AS step, doc_id, qs AS qsim, sc AS mmr_score FROM sel5
-"""
-
-
-def q_stream_stream_join(spark, sf_dir):
-    """Streaming STREAM-STREAM inner join — the last streaming shape in
-    the family (windowed agg, stateful dedup, stateful counters):
-    clicks join purchases by user within [click_ts, click_ts + 1h],
-    both sides watermarked at a REAL 2-hour delay so the join state is
-    bounded, over 4 genuine micro-batches — proven ≡ the batch
-    time-range join bit-for-bit.
-
-    Staging detail that MAKES stream ≡ batch at a bounded watermark:
-    the input is split into four disjoint time slabs written as
-    explicitly mtime-ordered single files (FileStreamSource consumes
-    oldest-modification-first), so BOTH file sources advance through
-    event time in lockstep and nothing ever arrives behind the
-    watermark. The first cut staged via repartitionByRange in one
-    commit — the two sources then consumed the part files in different
-    orders, one raced the watermark past the other's pending slabs,
-    and 7 of 33 matches were late-dropped; delivery ORDER, not slab
-    shape, is what the watermark contract is about. Append-mode memory
-    sink (complete is not defined for stream-stream joins); event-time
-    columns cast NTZ→LTZ (watermarks need an instant; session tz is
-    pinned UTC) and only ids + the integral µs gap are output, so the
-    interpretation cancels cross-engine."""
-    import glob
-    import shutil
-
-    batch = _t(spark, sf_dir, "events")
-    stage = "/tmp/xdan_stream_ssj_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4,
-            "layout": "mtime-ordered-slabs-v2"}
-    marker = os.path.join(stage, "_SPEC.json")
-
-    def _build():
-        shutil.rmtree(os.path.join(stage, "events"), ignore_errors=True)
-        os.makedirs(os.path.join(stage, "events"), exist_ok=True)
-        w = Window.orderBy("ts", "event_id")
-        slabbed = batch.withColumn("_q", F.ntile(4).over(w))
-        for i in range(1, 5):
-            tmp = os.path.join(stage, f"_b{i}")
-            (slabbed.filter(F.col("_q") == i).drop("_q")
-             .coalesce(1).write.mode("overwrite").parquet(tmp))
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, "events", f"{i:05d}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(tmp)
-
-    _stage_with_spec(marker, spec, _build)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/events")
-    )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_id").alias("click_id"),
-                F.col("ts").cast("timestamp").alias("cts"))
-        .withWatermark("cts", "2 hours")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").cast("timestamp").alias("pts"))
-        .withWatermark("pts", "2 hours")
-    )
-    j = clicks.join(
-        purchases,
-        F.expr("user_id = p_user AND pts >= cts "
-               "AND pts <= cts + INTERVAL 1 HOUR"),
-    ).select(
-        "user_id", "click_id", "purchase_id",
-        F.expr("unix_micros(pts) - unix_micros(cts)").alias("gap_us"),
-    )
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_ssj_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        j.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    local = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-    return local
-
-
-SQL_STREAM_STREAM_JOIN = """
-SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-       epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-FROM events c JOIN events p
-  ON c.user_id = p.user_id
-WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-"""
-
-
-def q_stream_left_join(spark, sf_dir):
-    """Streaming stream-stream LEFT OUTER join — the semantically hard
-    streaming shape: matched pairs emit immediately, but an unmatched
-    click may only emit its null row once the watermark PASSES the end
-    of its join window (cts + 1h < watermark) — earlier emission could
-    be contradicted by a late purchase. With availableNow the final
-    no-data batch flushes every click whose window closed under the
-    terminal watermark min(max cts, max pts) − 2h; clicks still inside
-    the 2-hour safety margin are correctly WITHHELD, and the oracle
-    twin reproduces exactly that emission rule (strict <, verified
-    empirically) rather than pretending stream equals a plain batch
-    left join. Same mtime-ordered slab staging as
-    q_stream_stream_join (shared stage dir)."""
-    import glob
-    import shutil
-
-    batch = _t(spark, sf_dir, "events")
-    stage = "/tmp/xdan_stream_ssj_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4,
-            "layout": "mtime-ordered-slabs-v2"}
-    marker = os.path.join(stage, "_SPEC.json")
-
-    def _build():
-        shutil.rmtree(os.path.join(stage, "events"), ignore_errors=True)
-        os.makedirs(os.path.join(stage, "events"), exist_ok=True)
-        w = Window.orderBy("ts", "event_id")
-        slabbed = batch.withColumn("_q", F.ntile(4).over(w))
-        for i in range(1, 5):
-            tmp = os.path.join(stage, f"_b{i}")
-            (slabbed.filter(F.col("_q") == i).drop("_q")
-             .coalesce(1).write.mode("overwrite").parquet(tmp))
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, "events", f"{i:05d}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(tmp)
-
-    _stage_with_spec(marker, spec, _build)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/events")
-    )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_id").alias("click_id"),
-                F.col("ts").cast("timestamp").alias("cts"))
-        .withWatermark("cts", "2 hours")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").cast("timestamp").alias("pts"))
-        .withWatermark("pts", "2 hours")
-    )
-    j = clicks.join(
-        purchases,
-        F.expr("user_id = p_user AND pts >= cts "
-               "AND pts <= cts + INTERVAL 1 HOUR"),
-        "leftOuter",
-    ).select(
-        "user_id", "click_id", "purchase_id",
-        F.expr("unix_micros(pts) - unix_micros(cts)").alias("gap_us"),
-    )
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_slj_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        j.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    local = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-    return local
-
-
-SQL_STREAM_LEFT_JOIN = """
-WITH c AS (
-  SELECT user_id, event_id AS click_id, ts AS cts
-  FROM events WHERE event_type = 'click'
-),
-p AS (
-  SELECT user_id AS p_user, event_id AS purchase_id, ts AS pts
-  FROM events WHERE event_type = 'purchase'
-),
-wm AS (
-  SELECT least((SELECT max(cts) FROM c), (SELECT max(pts) FROM p))
-         - INTERVAL 2 HOUR AS w
-),
-matched AS (
-  SELECT c.user_id, c.click_id, p.purchase_id,
-         epoch_us(p.pts) - epoch_us(c.cts) AS gap_us
-  FROM c JOIN p
-    ON c.user_id = p.p_user
-   AND p.pts >= c.cts AND p.pts <= c.cts + INTERVAL 1 HOUR
-),
-unmatched AS (
-  SELECT c.user_id, c.click_id,
-         CAST(NULL AS BIGINT) AS purchase_id,
-         CAST(NULL AS BIGINT) AS gap_us
-  FROM c CROSS JOIN wm
-  WHERE NOT EXISTS (
-          SELECT 1 FROM p
-          WHERE p.p_user = c.user_id
-            AND p.pts >= c.cts AND p.pts <= c.cts + INTERVAL 1 HOUR)
-    AND c.cts + INTERVAL 1 HOUR < wm.w
-)
-SELECT * FROM matched UNION ALL SELECT * FROM unmatched
 """
 
 
@@ -12710,12 +9035,10 @@ def q_term_burstiness(spark, sf_dir):
         - F.col("total").cast("double") * F.col("total").cast("double")
     ) / (nd * nd)
     fano = F.round(var / mean, 6)
-    wnd = Window.orderBy(F.desc("fano"), F.asc("term"))
     return (
         j.select("term", "total", fano.alias("fano"))
-        .withColumn("_rk", F.row_number().over(wnd))
-        .filter(F.col("_rk") <= 20)
-        .drop("_rk")
+        .orderBy(F.desc("fano"), F.asc("term"))
+        .limit(20)
     )
 
 
@@ -13152,23 +9475,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "tf_top_terms": q_tf_top_terms,
     "a6_token_quantiles": q_a6_token_quantiles,
     "o2_topn_per_group": q_o2_topn_per_group,
-    "sessionize_events": q_sessionize_events,
-    "a7_event_pivot": q_a7_event_pivot,
     "a8_langs_per_source": q_a8_langs_per_source,
-    "asof_purchase_attach": q_asof_purchase_attach,
-    "j3_dim_broadcast": q_j3_dim_broadcast,
-    "range_join_error_windows": q_range_join_error_windows,
-    "rolling_value_avg": q_rolling_value_avg,
     "a9_rollup_report": q_a9_rollup_report,
     "a10_quality_tiles": q_a10_quality_tiles,
-    "u2_set_ops": q_u2_set_ops,
     "dedup_lev_pairs": q_dedup_lev_pairs,
-    "funnel_conversion": q_funnel_conversion,
     "a11_feature_corr": q_a11_feature_corr,
-    "p11_json_props": q_p11_json_props,
-    "j4_reconcile": q_j4_reconcile,
-    "a12_distinct_exact": q_a12_distinct_exact,
-    "cohort_retention": q_cohort_retention,
     "boilerplate_shingles": q_boilerplate_shingles,
     "a13_trimmed_mean": q_a13_trimmed_mean,
     "a14_source_share": q_a14_source_share,
@@ -13177,11 +9488,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pmi_bigrams": q_pmi_bigrams,
     "a15_zscore_outliers": q_a15_zscore_outliers,
     "cc_cluster_histogram": q_cc_cluster_histogram,
-    "a16_daily_gapfill": q_a16_daily_gapfill,
-    "a17_user_percentile": q_a17_user_percentile,
     "gopher_stats": q_gopher_stats,
     "a18_median_mad": q_a18_median_mad,
-    "a19_event_lift": q_a19_event_lift,
     "a20_length_log2_hist": q_a20_length_log2_hist,
     "decon_benchmark_overlap": q_decon_benchmark_overlap,
     "oov_rate": q_oov_rate,
@@ -13194,26 +9502,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "token_entropy": q_token_entropy,
     "stopword_coverage": q_stopword_coverage,
     "dedup_canonical": q_dedup_canonical,
-    "burst_users": q_burst_users,
     "a21_length_band": q_a21_length_band,
     "lang_confusion": q_lang_confusion,
     "pii_prevalence": q_pii_prevalence,
     "calibration_curve": q_calibration_curve,
-    "props_key_census": q_props_key_census,
     "emb_norm_stats": q_emb_norm_stats,
-    "o3_shipping_priority": q_o3_shipping_priority,
-    "a22_late_ship_priority": q_a22_late_ship_priority,
-    "o4_regional_volume": q_o4_regional_volume,
-    "a23_promo_share": q_a23_promo_share,
-    "f3_disjunctive_parts": q_f3_disjunctive_parts,
-    "a24_first_last_event": q_a24_first_last_event,
-    "a25_event_transitions": q_a25_event_transitions,
     "a26_lang_deciles": q_a26_lang_deciles,
     "dedup_spans": q_dedup_spans,
-    "o5_returned_revenue": q_o5_returned_revenue,
-    "a27_linestatus_priority": q_a27_linestatus_priority,
-    "o6_large_orders": q_o6_large_orders,
-    "a29_nation_flows": q_a29_nation_flows,
     "a28_vocab_census": q_a28_vocab_census,
     "dedup_spans_within": q_dedup_spans_within,
     "term_df_scrub": q_term_df_scrub,
@@ -13221,36 +9516,21 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "domain_blocklist_filter": q_domain_blocklist,
     "host_quota_sample": q_host_quota_sample,
     "url_dedup_lastwins": q_url_dedup,
-    "a30_cust_order_dist": q_a30_cust_order_dist,
-    "a31_small_qty_revenue": q_a31_small_qty_revenue,
-    "a32_idle_rich_customers": q_a32_idle_rich_customers,
-    "a33_waiting_suppliers": q_a33_waiting_suppliers,
-    "a34_market_share": q_a34_market_share,
     "split_leak_safe": q_split_leak_safe,
     "robots_filter": q_robots_filter,
     "link_pagerank": q_link_pagerank,
     "link_degree_census": q_link_degree_census,
-    "a35_supplier_census": q_a35_supplier_census,
-    "a36_revenue_delta": q_a36_revenue_delta,
-    "a37_dominant_suppliers": q_a37_dominant_suppliers,
     "mixture_apply": q_mixture_apply,
     "normalize_punct": q_normalize_punct,
     "web_curation_e2e": q_web_curation_e2e,
     "ivf_append_probe": q_ivf_append_probe,
-    "a38_nation_profit": q_a38_nation_profit,
     "tok_bytes_ratio": q_tok_bytes_ratio,
     "hapax_rate": q_hapax_rate,
-    "a39_salted_hot_agg": q_a39_salted_hot_agg,
     "zipf_slope": q_zipf_slope,
     "hll_vocab": q_hll_vocab,
     "cms_terms": q_cms_terms,
-    "bloom_custkeys": q_bloom_custkeys,
     "gini_sources": q_gini_sources,
-    "cusum_drift": q_cusum_drift,
     "hits_scores": q_hits_scores,
-    "skyline_orders": q_skyline_orders,
-    "a40_revenue_concentration": q_a40_revenue_concentration,
-    "session_window_native": q_session_window_native,
     "profile_documents": q_profile_documents,
     "stream_hll": q_stream_hll,
     "kcore_links": q_kcore_links,
@@ -13258,61 +9538,36 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "scd2_pages": q_scd2_pages,
     "bool_search": q_bool_search,
     "wrs_sample": q_wrs_sample,
-    "spike_zscore": q_spike_zscore,
     "hll_by_source": q_hll_by_source,
     "lang_source_mi": q_lang_source_mi,
     "fd_census": q_fd_census,
-    "theilsen_trend": q_theilsen_trend,
-    "event_paths3": q_event_paths3,
-    "cms_join_est": q_cms_join_est,
-    "psi_value_drift": q_psi_value_drift,
     "negative_samples": q_negative_samples,
     "k_anon_docs": q_k_anon_docs,
     "dataset_fingerprint": q_dataset_fingerprint,
     "prefix_jaccard_pairs": q_prefix_jaccard_pairs,
-    "props_key_drift": q_props_key_drift,
-    "concurrency_peak": q_concurrency_peak,
     "source_cosine": q_source_cosine,
-    "rolling_users_hll": q_rolling_users_hll,
-    "fk_integrity": q_fk_integrity,
     "homoglyph_spoof": q_homoglyph_spoof,
-    "dow_chi2": q_dow_chi2,
-    "bloom_prefilter_join": q_bloom_prefilter_join,
     "neyman_plan": q_neyman_plan,
     "contract_checks": q_contract_checks,
     "log_quantile_sketch": q_log_quantile_sketch,
-    "hll_overlap": q_hll_overlap,
     "stream_cms": q_stream_cms,
-    "km_conversion": q_km_conversion,
     "rbo_source_rankings": q_rbo_source_rankings,
     "keep_ab_test": q_keep_ab_test,
     "vocab_coverage": q_vocab_coverage,
     "cdc_docs": q_cdc_docs,
-    "late_census": q_late_census,
-    "funnel3": q_funnel3,
     "emd_length_drift": q_emd_length_drift,
     "doc_novelty": q_doc_novelty,
-    "daily_xcorr": q_daily_xcorr,
     "term_adaptation": q_term_adaptation,
     "bigram_cond_entropy": q_bigram_cond_entropy,
-    "rfm_segments": q_rfm_segments,
     "local_clustering": q_local_clustering,
-    "event_stationary": q_event_stationary,
-    "session_entry_exit": q_session_entry_exit,
-    "interarrival_quantiles": q_interarrival_quantiles,
-    "order_status_audit": q_order_status_audit,
     "dup_rate_by_source": q_dup_rate_by_source,
     "centroid_confusion": q_centroid_confusion,
     "hill_tail": q_hill_tail,
     "simpson_probe": q_simpson_probe,
     "trending_terms": q_trending_terms,
-    "mase_forecast": q_mase_forecast,
     "vocab_growth": q_vocab_growth,
     "mix_rate_decomposition": q_mix_rate_decomposition,
     "page_churn_census": q_page_churn_census,
-    "skew_audit": q_skew_audit,
-    "qq_shift": q_qq_shift,
-    "consistent_hash": q_consistent_hash,
     "keep_discriminative_terms": q_keep_discriminative_terms,
     "theta_vocab_by_source": q_theta_vocab_by_source,
     "theta_vocab_overlap": q_theta_vocab_overlap,
@@ -13327,15 +9582,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rrf_hybrid_search": q_rrf_hybrid_search,
     "pq_topk": q_pq_topk,
     "quantile_normalize": q_quantile_normalize,
-    "dow_seasonal_anomaly": q_dow_seasonal_anomaly,
     "dsir_weights": q_dsir_weights,
     "bigram_lm_ppl": q_bigram_lm_ppl,
     "conformal_bounds": q_conformal_bounds,
     "energy_drift": q_energy_drift,
     "coverage_select": q_coverage_select,
     "mmr_rerank": q_mmr_rerank,
-    "stream_stream_join": q_stream_stream_join,
-    "stream_left_join": q_stream_left_join,
     "lsh_recall_eval": q_lsh_recall_eval,
     "split_by_cluster": q_split_by_cluster,
     "hashed_tf_knn": q_hashed_tf_knn,
@@ -13356,7 +9608,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "containment_pairs": q_containment_pairs,
     "script_profile": q_script_profile,
     "minhash_calibration": q_minhash_calibration,
-    "o8_min_cost_supplier": q_o8_min_cost_supplier,
     "boilerplate_prefix": q_boilerplate_prefix,
     "keep_rate_curve": q_keep_rate_curve,
     "unigram_kl_drift": q_unigram_kl_drift,
@@ -13371,13 +9622,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "zorder_values": q_zorder_values,
     "chunk_plan_strided": q_chunk_plan_strided,
     "mixture_temperature": q_mixture_temperature,
-    "fd_violations": q_fd_violations,
     "int8_topk": q_int8_topk,
     "dedup_exact_best": q_dedup_exact_best,
     "emb_dim_stats": q_emb_dim_stats,
-    "benford_census": q_benford_census,
     "incremental_curation_e2e": q_incremental_curation_e2e,
-    "o7_top_supplier": q_o7_top_supplier,
     "dup_cross_source": q_dup_cross_source,
     "s3_stratified_sample": q_s3_stratified_sample,
     "s3_fixed_n_per_group": q_s3_fixed_n_per_group,
@@ -13436,36 +9684,21 @@ def oracle_map() -> dict[str, str]:
         "domain_blocklist_filter": SQL_DOMAIN_BLOCKLIST,
         "host_quota_sample": SQL_HOST_QUOTA_SAMPLE,
         "url_dedup_lastwins": _sql_url_dedup(),
-        "a30_cust_order_dist": SQL_A30_CUST_ORDER_DIST,
-        "a31_small_qty_revenue": SQL_A31_SMALL_QTY_REVENUE,
-        "a32_idle_rich_customers": SQL_A32_IDLE_RICH_CUSTOMERS,
-        "a33_waiting_suppliers": SQL_A33_WAITING_SUPPLIERS,
-        "a34_market_share": SQL_A34_MARKET_SHARE,
         "split_leak_safe": SQL_SPLIT_LEAK_SAFE,
         "robots_filter": SQL_ROBOTS_FILTER,
         "link_pagerank": _sql_pagerank(),
         "link_degree_census": SQL_LINK_DEGREE_CENSUS,
-        "a35_supplier_census": SQL_A35_SUPPLIER_CENSUS,
-        "a36_revenue_delta": SQL_A36_REVENUE_DELTA,
-        "a37_dominant_suppliers": SQL_A37_DOMINANT_SUPPLIERS,
         "mixture_apply": SQL_MIXTURE_APPLY,
         "normalize_punct": _sql_normalize_punct(),
         "web_curation_e2e": SQL_WEB_CURATION_E2E,
         "ivf_append_probe": _sql_ivf_incr(),
-        "a38_nation_profit": SQL_A38_NATION_PROFIT,
         "tok_bytes_ratio": SQL_TOK_BYTES_RATIO,
         "hapax_rate": SQL_HAPAX_RATE,
-        "a39_salted_hot_agg": SQL_A39_SALTED_HOT_AGG,
         "zipf_slope": SQL_ZIPF_SLOPE,
         "hll_vocab": SQL_HLL_VOCAB,
         "cms_terms": SQL_CMS_TERMS,
-        "bloom_custkeys": SQL_BLOOM_CUSTKEYS,
         "gini_sources": SQL_GINI_SOURCES,
-        "cusum_drift": SQL_CUSUM_DRIFT,
         "hits_scores": SQL_HITS_SCORES,
-        "skyline_orders": SQL_SKYLINE_ORDERS,
-        "a40_revenue_concentration": SQL_A40_REVENUE_CONCENTRATION,
-        "session_window_native": SQL_SESSION_WINDOW_NATIVE,
         "profile_documents": SQL_PROFILE_DOCUMENTS,
         "stream_hll": SQL_STREAM_HLL,
         "kcore_links": SQL_KCORE_LINKS,
@@ -13473,61 +9706,36 @@ def oracle_map() -> dict[str, str]:
         "scd2_pages": SQL_SCD2_PAGES,
         "bool_search": SQL_BOOL_SEARCH,
         "wrs_sample": SQL_WRS_SAMPLE,
-        "spike_zscore": SQL_SPIKE_ZSCORE,
         "hll_by_source": SQL_HLL_BY_SOURCE,
         "lang_source_mi": SQL_LANG_SOURCE_MI,
         "fd_census": SQL_FD_CENSUS,
-        "theilsen_trend": SQL_THEILSEN_TREND,
-        "event_paths3": SQL_EVENT_PATHS3,
-        "cms_join_est": SQL_CMS_JOIN_EST,
-        "psi_value_drift": SQL_PSI_VALUE_DRIFT,
         "negative_samples": SQL_NEGATIVE_SAMPLES,
         "k_anon_docs": SQL_K_ANON_DOCS,
         "dataset_fingerprint": SQL_DATASET_FINGERPRINT,
         "prefix_jaccard_pairs": SQL_PREFIX_JACCARD_PAIRS,
-        "props_key_drift": SQL_PROPS_KEY_DRIFT,
-        "concurrency_peak": SQL_CONCURRENCY_PEAK,
         "source_cosine": SQL_SOURCE_COSINE,
-        "rolling_users_hll": SQL_ROLLING_USERS_HLL,
-        "fk_integrity": SQL_FK_INTEGRITY,
         "homoglyph_spoof": SQL_HOMOGLYPH_SPOOF,
-        "dow_chi2": SQL_DOW_CHI2,
-        "bloom_prefilter_join": SQL_BLOOM_PREFILTER_JOIN,
         "neyman_plan": SQL_NEYMAN_PLAN,
         "contract_checks": SQL_CONTRACT_CHECKS,
         "log_quantile_sketch": SQL_LOG_QUANTILE_SKETCH,
-        "hll_overlap": SQL_HLL_OVERLAP,
         "stream_cms": SQL_STREAM_CMS,
-        "km_conversion": SQL_KM_CONVERSION,
         "rbo_source_rankings": SQL_RBO_SOURCE_RANKINGS,
         "keep_ab_test": SQL_KEEP_AB_TEST,
         "vocab_coverage": SQL_VOCAB_COVERAGE,
         "cdc_docs": SQL_CDC_DOCS,
-        "late_census": SQL_LATE_CENSUS,
-        "funnel3": SQL_FUNNEL3,
         "emd_length_drift": SQL_EMD_LENGTH_DRIFT,
         "doc_novelty": SQL_DOC_NOVELTY,
-        "daily_xcorr": SQL_DAILY_XCORR,
         "term_adaptation": SQL_TERM_ADAPTATION,
         "bigram_cond_entropy": SQL_BIGRAM_COND_ENTROPY,
-        "rfm_segments": SQL_RFM_SEGMENTS,
         "local_clustering": SQL_LOCAL_CLUSTERING,
-        "event_stationary": SQL_EVENT_STATIONARY,
-        "session_entry_exit": SQL_SESSION_ENTRY_EXIT,
-        "interarrival_quantiles": SQL_INTERARRIVAL_QUANTILES,
-        "order_status_audit": SQL_ORDER_STATUS_AUDIT,
         "dup_rate_by_source": SQL_DUP_RATE_BY_SOURCE,
         "centroid_confusion": SQL_CENTROID_CONFUSION,
         "hill_tail": SQL_HILL_TAIL,
         "simpson_probe": SQL_SIMPSON_PROBE,
         "trending_terms": SQL_TRENDING_TERMS,
-        "mase_forecast": SQL_MASE_FORECAST,
         "vocab_growth": SQL_VOCAB_GROWTH,
         "mix_rate_decomposition": SQL_MIX_RATE_DECOMPOSITION,
         "page_churn_census": SQL_PAGE_CHURN_CENSUS,
-        "skew_audit": SQL_SKEW_AUDIT,
-        "qq_shift": SQL_QQ_SHIFT,
-        "consistent_hash": SQL_CONSISTENT_HASH,
         "keep_discriminative_terms": SQL_KEEP_DISCRIMINATIVE_TERMS,
         "theta_vocab_by_source": SQL_THETA_VOCAB_BY_SOURCE,
         "theta_vocab_overlap": SQL_THETA_VOCAB_OVERLAP,
@@ -13542,15 +9750,12 @@ def oracle_map() -> dict[str, str]:
         "rrf_hybrid_search": _sql_rrf_hybrid(),
         "pq_topk": _sql_pq_topk(),
         "quantile_normalize": SQL_QUANTILE_NORMALIZE,
-        "dow_seasonal_anomaly": SQL_DOW_SEASONAL_ANOMALY,
         "dsir_weights": SQL_DSIR_WEIGHTS,
         "bigram_lm_ppl": SQL_BIGRAM_LM_PPL,
         "conformal_bounds": SQL_CONFORMAL_BOUNDS,
         "energy_drift": SQL_ENERGY_DRIFT,
         "coverage_select": SQL_COVERAGE_SELECT,
         "mmr_rerank": SQL_MMR_RERANK,
-        "stream_stream_join": SQL_STREAM_STREAM_JOIN,
-        "stream_left_join": SQL_STREAM_LEFT_JOIN,
         "lsh_recall_eval": SQL_LSH_RECALL_EVAL,
         "split_by_cluster": SQL_SPLIT_BY_CLUSTER,
         "hashed_tf_knn": SQL_HASHED_TF_KNN,
@@ -13571,7 +9776,6 @@ def oracle_map() -> dict[str, str]:
         "containment_pairs": SQL_CONTAINMENT_PAIRS,
         "script_profile": _script_profile_sql(),
         "minhash_calibration": SQL_MINHASH_CALIBRATION,
-        "o8_min_cost_supplier": SQL_O8_MIN_COST_SUPPLIER,
         "boilerplate_prefix": SQL_BOILERPLATE_PREFIX,
         "keep_rate_curve": _sql_keep_rate_curve(),
         "unigram_kl_drift": SQL_UNIGRAM_KL_DRIFT,
@@ -13586,11 +9790,9 @@ def oracle_map() -> dict[str, str]:
         "zorder_values": _sql_zorder_values(),
         "chunk_plan_strided": SQL_CHUNK_STRIDED,
         "mixture_temperature": SQL_MIXTURE_TEMPERATURE,
-        "fd_violations": SQL_FD_VIOLATIONS,
         "int8_topk": SQL_INT8_TOPK,
         "dedup_exact_best": SQL_DEDUP_EXACT_BEST,
         "emb_dim_stats": SQL_EMB_DIM_STATS,
-        "benford_census": _sql_benford_census(),
         "incremental_curation_e2e": _sql_incremental_curation(),
         "lang_id_heuristic": SQL_LANG_ID,
         "doc_fingerprint": SQL_DOC_FINGERPRINT,
@@ -13598,23 +9800,11 @@ def oracle_map() -> dict[str, str]:
         "tf_top_terms": SQL_TF_TOP_TERMS,
         "a6_token_quantiles": SQL_A6_TOKEN_QUANTILES,
         "o2_topn_per_group": SQL_O2_TOPN,
-        "sessionize_events": SQL_SESSIONIZE,
-        "a7_event_pivot": SQL_A7_PIVOT,
         "a8_langs_per_source": SQL_A8_LANGS,
-        "asof_purchase_attach": SQL_ASOF,
-        "j3_dim_broadcast": SQL_J3_DIM,
-        "range_join_error_windows": SQL_RANGE_JOIN,
-        "rolling_value_avg": SQL_ROLLING_AVG,
         "a9_rollup_report": SQL_A9_ROLLUP,
         "a10_quality_tiles": SQL_A10_TILES,
-        "u2_set_ops": SQL_U2_SET_OPS,
         "dedup_lev_pairs": SQL_DEDUP_LEV,
-        "funnel_conversion": SQL_FUNNEL,
         "a11_feature_corr": SQL_A11_CORR,
-        "p11_json_props": SQL_P11_JSON,
-        "j4_reconcile": SQL_J4_RECONCILE,
-        "a12_distinct_exact": SQL_A12_DISTINCT,
-        "cohort_retention": SQL_COHORT_RETENTION,
         "boilerplate_shingles": SQL_BOILERPLATE,
         "a13_trimmed_mean": SQL_A13_TRIMMED,
         "a14_source_share": SQL_A14_SHARE,
@@ -13623,11 +9813,8 @@ def oracle_map() -> dict[str, str]:
         "pmi_bigrams": SQL_PMI,
         "a15_zscore_outliers": SQL_A15_ZSCORE,
         "cc_cluster_histogram": SQL_CC_HISTOGRAM,
-        "a16_daily_gapfill": SQL_A16_GAPFILL,
-        "a17_user_percentile": SQL_A17_PERCENTILE,
         "gopher_stats": SQL_GOPHER_STATS,
         "a18_median_mad": SQL_A18_MAD,
-        "a19_event_lift": SQL_A19_LIFT,
         "a20_length_log2_hist": SQL_A20_LOG2,
         "decon_benchmark_overlap": SQL_DECON,
         "oov_rate": SQL_OOV,
@@ -13642,30 +9829,16 @@ def oracle_map() -> dict[str, str]:
             "{stoplist}", _stopword_list_sql()
         ),
         "dedup_canonical": SQL_DEDUP_CANONICAL,
-        "burst_users": SQL_BURST_USERS,
         "a21_length_band": SQL_A21_BAND,
         "lang_confusion": _lang_confusion_sql(),
         "pii_prevalence": _pii_prevalence_sql(),
         "calibration_curve": _calibration_curve_sql(),
-        "props_key_census": SQL_PROPS_KEY_CENSUS,
         "emb_norm_stats": SQL_EMB_NORM_STATS,
-        "o3_shipping_priority": SQL_O3_SHIPPING,
-        "a22_late_ship_priority": SQL_A22_LATE_SHIP,
-        "o4_regional_volume": SQL_O4_REGIONAL_VOLUME,
-        "a23_promo_share": SQL_A23_PROMO_SHARE,
-        "f3_disjunctive_parts": SQL_F3_DISJUNCTIVE,
-        "a24_first_last_event": SQL_A24_FIRST_LAST,
-        "a25_event_transitions": SQL_A25_TRANSITIONS,
         "a26_lang_deciles": SQL_A26_LANG_DECILES,
         "dedup_spans": SQL_DEDUP_SPANS,
-        "o5_returned_revenue": SQL_O5_RETURNED_REVENUE,
-        "a27_linestatus_priority": SQL_A27_LINESTATUS_PRIORITY,
-        "o6_large_orders": SQL_O6_LARGE_ORDERS,
-        "a29_nation_flows": SQL_A29_NATION_FLOWS,
         "a28_vocab_census": SQL_A28_VOCAB_CENSUS,
         "dedup_spans_within": SQL_DEDUP_SPANS_WITHIN,
         "term_df_scrub": SQL_TERM_DF_SCRUB,
-        "o7_top_supplier": SQL_O7_TOP_SUPPLIER,
         "dup_cross_source": _dup_cross_source_sql(),
         "s3_stratified_sample": SQL_S3_STRATIFIED,
         "s3_fixed_n_per_group": SQL_S3_FIXED_N,

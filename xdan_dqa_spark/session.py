@@ -11,6 +11,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def host_cpus() -> int:
+    """SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """SPARK_DRIVER_MEM, else half the machine's memory capped at 16g. In
+    local mode the driver JVM shares the host with one Python worker per
+    core, so a heap sized past the machine (16g on a 15 GiB box) can only
+    end in the kernel's OOM killer."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(total_mb // 2, _DRIVER_MEM_CAP_MB)}m"
+
 
 def get_spark(
     app_name: str = "xdan_dqa_spark",
@@ -49,12 +68,12 @@ def get_spark(
     for k, v in _MALLOC_ENV.items():
         os.environ.setdefault(k, v)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # local[N]: one JVM — match cores. On a real cluster this is set to
         # ~2-3x total executor cores via spark-submit conf instead.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
         shuffle_partitions = cpus if n == "*" else int(n)
 
     builder = (
@@ -87,7 +106,7 @@ def get_spark(
         # also removes a per-executor first-task warmup stall.
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in _MALLOC_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
