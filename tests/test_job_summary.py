@@ -101,6 +101,21 @@ def test_resume_missing_bucketed_table_fails(tmp_path):
     assert "does not exist in the metastore" in (out.stderr + out.stdout)
 
 
+def test_fd_violations_census(spark):
+    from xdan_dqa_spark.operators.metrics import fd_violations
+
+    df = spark.createDataFrame(
+        [("u1", "en"), ("u1", "en"), ("u1", "fr"),   # violates: 2 langs
+         ("u2", "en"), ("u2", "en"),                  # clean
+         ("u3", "de")],                               # clean singleton
+        "url string, lang string",
+    )
+    got = fd_violations(df, "url", "lang").collect()
+    assert len(got) == 1
+    r = got[0]
+    assert (r["url"], r["n_rows"], r["n_distinct_rhs"]) == ("u1", 3, 2)
+
+
 def test_dedup_job_subprocess_end_to_end(tmp_path):
     """jobs/dedup_job.py lifecycle in a clean process: synth corpus
     (20% exact + 10% near dups) → survivors + report parquet + RESULT

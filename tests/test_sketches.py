@@ -1,7 +1,8 @@
 """Sketch invariants (operators/sketches.py): HyperLogLog must land
 within its theoretical error band and its register state must merge by
-max; count-min must never undercount; theta samples intersect as sets;
-Gini (operators/curation.py) hits its closed-form extremes.
+max; count-min must never undercount; the Bloom filter must have zero
+false negatives and a measured false-positive rate near theory; Gini
+and CUSUM (operators/curation.py) hit their closed-form extremes.
 Value-level cross-engine identity is pinned by the DuckDB twins
 (hll_vocab / cms_terms / theta_vocab_overlap / gini_sources in
 plans/entry_queries.py); these tests pin the probabilistic contracts
@@ -13,13 +14,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from xdan_dqa_spark.operators.sketches import (
+    BLOOM_K,
     HLL_M,
+    bloom_build,
+    bloom_probe_report,
+    bloom_theoretical_fp,
     cms_heavy_hitters,
     cms_table,
     hll_estimate,
     hll_registers,
 )
-from xdan_dqa_spark.operators.curation import gini_concentration
+from xdan_dqa_spark.operators.curation import (
+    cusum_changepoint,
+    gini_concentration,
+)
 
 
 @pytest.fixture(scope="module")
@@ -99,6 +107,38 @@ def test_cms_table_state_is_bounded(spark):
     assert all(r["s"] == 50_000 for r in per_row)
 
 
+def test_bloom_no_false_negatives_and_fp_near_theory(spark):
+    build = spark.range(2_000).select(
+        F.concat(F.lit("in-"), F.col("id")).alias("k"))
+    probe_in = build
+    probe_out = spark.range(20_000).select(
+        F.concat(F.lit("out-"), F.col("id")).alias("k"))
+    rep_in = bloom_probe_report(build, "k", probe_in, "k").collect()[0]
+    assert rep_in["n_claimed_present"] == rep_in["n_probes"] == 2_000
+    assert rep_in["n_false_positives"] == 0
+    rep_out = bloom_probe_report(build, "k", probe_out, "k").collect()[0]
+    assert rep_out["n_actually_present"] == 0
+    theory = bloom_theoretical_fp(2_000)
+    # 20k negative probes: the measured rate should be within ~3x of
+    # theory (binomial noise at this sample size is far tighter; the
+    # slack covers md5's mild non-uniformity over structured keys)
+    assert rep_out["fp_rate"] <= 3 * theory + 1e-4
+    assert rep_out["n_claimed_present"] == rep_out["n_false_positives"]
+
+
+def test_bloom_bitset_is_bounded_and_broadcast(spark):
+    build = spark.range(3_000).select(F.col("id").cast("string").alias("k"))
+    bits = bloom_build(build, "k")
+    n_bits = bits.count()
+    assert n_bits <= min(65_536, 3_000 * BLOOM_K)
+    probe = spark.range(100).select(F.col("id").cast("string").alias("k"))
+    plan = (
+        bloom_probe_report(build, "k", probe, "k")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "BroadcastHashJoin" in plan
+
+
 def test_gini_extremes(spark):
     even = spark.createDataFrame(
         [(f"s{i % 4}",) for i in range(400)], "source string")
@@ -113,6 +153,32 @@ def test_gini_extremes(spark):
     even1 = even.withColumn("w", F.lit(1.0))
     g_w = gini_concentration(even1, "source", weight_col="w").collect()[0]
     assert g_w["gini"] == 0.0
+
+
+def test_cusum_finds_injected_level_shift(spark):
+    # 30 days at 10/day, then 30 days at 50/day: the max |D_t| of a
+    # clean step function sits exactly at the step boundary (day 30)
+    import datetime as dt
+
+    rows = []
+    for d in range(60):
+        day = dt.date(2024, 1, 1) + dt.timedelta(days=d)
+        rows.append(("feed", f"{day} 00:00:00", 10.0 if d < 30 else 50.0))
+    df = spark.createDataFrame(rows, "event_type string, ts string, value double")
+    df = df.withColumn("ts", F.to_timestamp("ts"))
+    out = cusum_changepoint(df).collect()[0]
+    assert out["n_days"] == 60
+    assert str(out["changepoint_day"]) == "2024-01-30"
+    # D_30 = n*P_30 - 30*T = 60*300 - 30*1800 = -36000 -> /n = 600
+    assert out["max_abs_cusum"] == 600.0
+
+
+def test_cusum_flat_series_is_null_signal(spark):
+    rows = [("flat", f"2024-03-{d + 1:02d} 12:00:00", 7.0) for d in range(20)]
+    df = spark.createDataFrame(rows, "event_type string, ts string, value double")
+    df = df.withColumn("ts", F.to_timestamp("ts"))
+    out = cusum_changepoint(df).collect()[0]
+    assert out["max_abs_cusum"] == 0.0
 
 
 # ---- batch 40: weighted reservoir, MI, FD discovery ----
@@ -180,7 +246,43 @@ def test_fd_discovery_census(spark):
         fd_discovery(df, ["city"])
 
 
-# ---- batch 41: negatives ----
+# ---- batch 41: CMS join estimate, PSI, negatives ----
+
+
+def test_cms_join_estimate_never_underestimates(spark):
+    from xdan_dqa_spark.operators.sketches import cms_join_cardinality
+
+    left = spark.createDataFrame(
+        [(i % 50,) for i in range(500)], "k long")        # 10 rows per key
+    right = spark.createDataFrame(
+        [(i,) for i in range(40)], "k long")              # keys 0..39
+    out = cms_join_cardinality(left, "k", right, "k").collect()[0]
+    assert out["exact_join_count"] == 400                 # 40 keys x 10
+    assert out["cms_estimate"] >= 400
+    assert out["overcount"] == out["cms_estimate"] - 400
+
+
+def test_psi_zero_on_identical_and_large_on_shift(spark):
+    from xdan_dqa_spark.operators.curation import psi_drift
+
+    # identical halves: every bucket two-sided with equal shares -> 0
+    same = spark.createDataFrame(
+        [(float(v % 100), v % 2 == 0) for v in range(2000)],
+        "value double, ref boolean")
+    r = psi_drift(same, "value", F.col("ref")).collect()[0]
+    assert r["psi"] == 0.0 and r["n_skipped"] == 0
+    # reproportioned current slice: ref uniform over buckets 0-3, cur
+    # concentrates 80% of its mass in buckets 0-1 -> textbook
+    # "population shift" PSI (~0.42); plus one cur-only bucket that
+    # must be COUNTED as skipped, not epsilon-fudged
+    ref_rows = [(float(v % 40), True) for v in range(1000)]
+    cur_rows = ([(float(v % 20), False) for v in range(800)]
+                + [(20.0 + float(v % 20), False) for v in range(190)]
+                + [(45.0, False)] * 10)
+    shift = spark.createDataFrame(ref_rows + cur_rows, "value double, ref boolean")
+    r2 = psi_drift(shift, "value", F.col("ref")).collect()[0]
+    assert r2["psi"] > 0.25
+    assert r2["n_skipped"] == 1   # the cur-only bucket 4
 
 
 def test_negative_samples_contract(spark):
@@ -269,7 +371,7 @@ def test_prefix_filter_matches_bruteforce(spark):
         prefix_filter_pairs(df, threshold_num=0, threshold_den=3)
 
 
-# ---- batch 43: source cosine ----
+# ---- batch 43: source cosine, rolling HLL ----
 
 
 def test_source_cosine_extremes(spark):
@@ -287,7 +389,41 @@ def test_source_cosine_extremes(spark):
     assert ("s1", "s3") not in got      # zero shared terms -> no row
 
 
-# ---- batch 44: homoglyphs, Neyman ----
+def test_rolling_hll_window1_equals_daily_and_window_covers_span(spark):
+    import datetime as dt
+
+    from xdan_dqa_spark.operators.sketches import (
+        hll_estimate,
+        hll_rolling_estimate,
+    )
+
+    rows = []
+    for d in range(4):
+        day = dt.date(2024, 9, 1) + dt.timedelta(days=d)
+        for u in range(100 * (d + 1)):
+            rows.append((f"u{d}-{u}", f"{day} 10:00:00"))
+    df = spark.createDataFrame(rows, "user_id string, ts string")
+    df = df.withColumn("ts", F.to_timestamp("ts"))
+    # a window spanning the whole fixture equals the global estimate on
+    # the LAST day (register merge == union of all days)
+    whole = hll_rolling_estimate(df, "user_id", "ts", window_days=10)
+    last = max(r["day"] for r in whole.collect())
+    got_last = {r["day"]: r["hll_estimate"] for r in whole.collect()}[last]
+    glob = hll_estimate(df, "user_id").collect()[0]["hll_estimate"]
+    assert got_last == glob
+    # window=1 equals each day's own estimate
+    w1 = {r["day"]: r["hll_estimate"]
+          for r in hll_rolling_estimate(df, "user_id", "ts",
+                                        window_days=1).collect()}
+    for d in range(4):
+        day_df = df.filter(
+            F.to_date("ts") == str(dt.date(2024, 9, 1) + dt.timedelta(days=d)))
+        solo = hll_estimate(day_df, "user_id").collect()[0]["hll_estimate"]
+        dkey = sorted(w1)[d]
+        assert w1[dkey] == solo
+
+
+# ---- batch 44: homoglyphs, bloom prefilter, Neyman ----
 
 
 def test_homoglyph_census_flags_only_spoofed(spark):
@@ -308,6 +444,23 @@ def test_homoglyph_census_flags_only_spoofed(spark):
     assert folded[1]["f"] == "paypal login"
 
 
+def test_bloom_prefilter_report_contract_with_duplicate_fact_keys(spark):
+    from xdan_dqa_spark.operators.sketches import bloom_join_prefilter_report
+
+    # fact repeats every key 5x — the probe must count fact ROWS, and a
+    # repeated key must not fail the K-position test (regression: the
+    # per-row explode accumulated 4r hits)
+    fact = spark.createDataFrame(
+        [(i % 200,) for i in range(1000)], "k long")
+    dim = spark.createDataFrame([(i,) for i in range(50)], "k long")
+    r = bloom_join_prefilter_report(fact, "k", dim, "k").collect()[0]
+    assert r["n_fact_rows"] == 1000
+    assert r["n_true_match"] == 250            # keys 0..49, 5 rows each
+    assert r["n_pass_bloom"] >= r["n_true_match"]
+    assert r["n_false_pass"] == r["n_pass_bloom"] - r["n_true_match"]
+    assert 0 < r["pruned_frac"] <= 0.75
+
+
 def test_neyman_allocation_proportional_and_zero_variance(spark):
     from xdan_dqa_spark.operators.metrics import neyman_allocation
 
@@ -325,7 +478,7 @@ def test_neyman_allocation_proportional_and_zero_variance(spark):
         neyman_allocation(df, "g", "y", total_k=0)
 
 
-# ---- batch 45: contract gate, log-quantile sketch ----
+# ---- batch 45: contract gate, log-quantile sketch, HLL overlap ----
 
 
 def test_contract_report_counts_violations(spark):
@@ -358,6 +511,22 @@ def test_log_quantile_sketch_respects_2x_bound(spark):
     for r in out:
         assert 0.5 <= r["ratio"] <= 2.0      # the guaranteed band
     # sketch state is bounded: <= 64 power-of-two buckets regardless of n
+
+
+def test_hll_overlap_extremes(spark):
+    from xdan_dqa_spark.operators.sketches import hll_set_overlap
+
+    a = spark.range(2000).select(F.col("id").cast("string").alias("k"))
+    same = hll_set_overlap(a, a, "k").collect()[0]
+    # identical sets: union est == each est -> overlap est == set est
+    assert same["est_union"] == same["est_a"] == same["est_b"]
+    assert same["est_overlap"] == same["est_a"]
+    assert same["exact_overlap"] == 2000
+    b = spark.range(2000, 4000).select(F.col("id").cast("string").alias("k"))
+    disj = hll_set_overlap(a, b, "k").collect()[0]
+    assert disj["exact_overlap"] == 0
+    # inclusion-exclusion noise stays small relative to the set sizes
+    assert abs(disj["est_overlap"]) < 0.3 * 2000
 
 
 # ---- batch 46: RBO, coverage curve ----
@@ -489,9 +658,12 @@ def test_round5_operators_repartition_invariant(spark):
     decimal sums, integer fixed-point, and struct-max argmins must give
     BIT-IDENTICAL results at any parallelism. One fixture, several
     operators, 1 vs 13 partitions."""
+    import datetime as dt
+
     from xdan_dqa_spark.operators.curation import (
         emd_length_drift,
         gini_concentration,
+        psi_drift,
     )
     from xdan_dqa_spark.operators.metrics import mutual_information
     from xdan_dqa_spark.operators.sketches import (
@@ -503,9 +675,10 @@ def test_round5_operators_repartition_invariant(spark):
     rows = []
     for i in range(2000):
         rows.append((i, f"s{i % 7}", "en" if i % 3 else "fr",
-                     100 + (i * 37) % 900))
+                     100 + (i * 37) % 900, float(i % 250), i % 2 == 0))
     df = spark.createDataFrame(
-        rows, "doc_id long, source string, lang string, n_chars long")
+        rows, "doc_id long, source string, lang string, n_chars long, "
+              "value double, ref boolean")
     variants = [df.coalesce(1), df.repartition(13)]
 
     def run(d):
@@ -513,6 +686,7 @@ def test_round5_operators_repartition_invariant(spark):
             tuple(map(tuple, gini_concentration(d, "source").collect())),
             tuple(sorted(map(tuple, emd_length_drift(d, "n_chars", "source",
                                                      100).collect()))),
+            tuple(map(tuple, psi_drift(d, "value", F.col("ref")).collect())),
             tuple(map(tuple, mutual_information(d, "lang", "source").collect())),
             tuple(map(tuple, hll_estimate(d.select(
                 F.col("doc_id").cast("string").alias("v")), "v").collect())),

@@ -998,6 +998,68 @@ def gini_concentration(df: DataFrame, group_col: str = "source",
     )
 
 
+def cusum_changepoint(events: DataFrame, ts_col: str = "ts",
+                      value_col: str = "value",
+                      group_col: str = "event_type") -> DataFrame:
+    """Per-group CUSUM changepoint report over DAILY value totals:
+    (group, n_days, changepoint_day, max_abs_cusum) — the
+    level-shift detector a feed-health monitor runs per source/type
+    (a crawler that silently halves its yield flags here in one pass,
+    without any model fitting).
+
+    The classic statistic C_t = sum_{i<=t}(x_i - mean) needs the mean
+    — a division that would force floats into the cumulative sum. It
+    is kept EXACT by multiplying through by n: D_t = n*P_t - t*T
+    (P_t = running prefix sum, T = grand total, both DECIMAL), which
+    has the same argmax; the changepoint estimate is argmax_t |D_t|
+    (ties -> earliest day) and the reported magnitude is
+    max|D_t|/n — ONE float division per group at the end.
+
+    Scale shape: the day grain is first folded by a map-side-combinable
+    aggregate (shuffle rows = groups x days), and every window below
+    runs over that bounded per-group day table (hundreds of rows per
+    partition), never over raw events. Daily sums are DECIMAL(20,6) —
+    order-independent — so the whole report is oracle-exact."""
+    daily = (
+        events.groupBy(
+            F.col(group_col).alias("grp"),
+            F.to_date(F.col(ts_col)).alias("day"),
+        )
+        .agg(F.sum(F.col(value_col).cast("decimal(20,6)")).alias("x"))
+    )
+    wd = Window.partitionBy("grp").orderBy("day")
+    wall = Window.partitionBy("grp")
+    staged = (
+        daily.withColumn("t", F.row_number().over(wd))
+        .withColumn("p", F.sum("x").over(wd))
+        .withColumn("n", F.count("*").over(wall))
+        .withColumn("tot", F.sum("x").over(wall))
+    )
+    # precision discipline: day-count operands at DECIMAL(10,0), prefix/
+    # total sums at DECIMAL(26,6) — each product is exactly DECIMAL(37,6)
+    # under both engines' rules (10+26+1), and the subtraction widens to
+    # DECIMAL(38,6) WITHOUT hitting either engine's 38-digit clamp, so
+    # no scale reduction/truncation path is ever taken.
+    d = (
+        F.col("n").cast("decimal(10,0)") * F.col("p").cast("decimal(26,6)")
+        - F.col("t").cast("decimal(10,0)") * F.col("tot").cast("decimal(26,6)")
+    )
+    scored = staged.withColumn("_absd", F.abs(d))
+    pick = Window.partitionBy("grp").orderBy(F.desc("_absd"), F.asc("day"))
+    return (
+        scored.withColumn("_rk", F.row_number().over(pick))
+        .filter(F.col("_rk") == 1)
+        .select(
+            F.col("grp").alias(group_col),
+            F.col("n").alias("n_days"),
+            F.col("day").alias("changepoint_day"),
+            F.round(
+                F.col("_absd").cast("double") / F.col("n").cast("double"), 6
+            ).alias("max_abs_cusum"),
+        )
+    )
+
+
 def scd2_intervals(df: DataFrame, key_col: str = "canonical_url",
                    ts_col: str = "crawl_ts",
                    hash_col: str = "content_hash") -> DataFrame:
@@ -1037,6 +1099,55 @@ def scd2_intervals(df: DataFrame, key_col: str = "canonical_url",
         F.col(ts_col).alias("valid_from"),
         F.lead(F.col(ts_col)).over(w2).alias("valid_to"),
     ).withColumn("is_current", F.col("valid_to").isNull())
+
+
+def psi_drift(df: DataFrame, value_col: str, split_col,
+              bucket_width: float = 10.0) -> DataFrame:
+    """Population Stability Index between two slices of a numeric
+    column — the industry-standard drift score model monitors alarm on
+    (PSI < 0.1 stable, 0.1–0.25 moderate, > 0.25 population shift).
+    ``split_col`` is a boolean Column marking the reference slice;
+    values bucket at fixed ``bucket_width``. Returns one row
+    (n_buckets, n_skipped, psi).
+
+    PSI = Σ_b (p_b − q_b)·ln(p_b/q_b) over buckets observed in BOTH
+    slices; one-sided buckets make the term infinite, so they are
+    EXCLUDED and counted in ``n_skipped`` — no silent epsilon fudge,
+    the report says exactly what it dropped (the standard alternative,
+    epsilon-smoothing, is a documented swap).
+
+    Determinism discipline: bucket = floor(value/width) — one IEEE
+    division+floor, identical cross-engine; p, q are exact integer
+    counts over slice totals; each bucket's term is ONE fixed IEEE
+    sequence rounded to 9 dp and DECIMAL-summed (order-free — the
+    mutual_information pattern). Shape: one (slice, bucket) fold
+    (bounded by the bucket count), a pivot to per-bucket (ref, cur)
+    counts, a 1-row total broadcast, one bounded final fold."""
+    b = F.floor(F.col(value_col).cast("double") / F.lit(float(bucket_width)))
+    cells = df.select(
+        b.alias("bucket"),
+        F.when(split_col, F.lit("ref")).otherwise(F.lit("cur")).alias("side"),
+    ).groupBy("bucket").agg(
+        F.sum(F.when(F.col("side") == "ref", 1).otherwise(0)).alias("n_ref"),
+        F.sum(F.when(F.col("side") == "cur", 1).otherwise(0)).alias("n_cur"),
+    )
+    tot = cells.agg(
+        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
+    )
+    j = cells.crossJoin(F.broadcast(tot))
+    p = F.col("n_ref").cast("double") / F.col("t_ref").cast("double")
+    q = F.col("n_cur").cast("double") / F.col("t_cur").cast("double")
+    both = (F.col("n_ref") > 0) & (F.col("n_cur") > 0)
+    term = (p - q) * F.log(p / q)
+    return j.select(
+        both.alias("_both"),
+        F.when(both, F.round(term, 9)).otherwise(F.lit(0.0))
+        .cast("decimal(20,9)").alias("_t"),
+    ).agg(
+        F.sum(F.when(F.col("_both"), 1).otherwise(0)).alias("n_buckets"),
+        F.sum(F.when(~F.col("_both"), 1).otherwise(0)).alias("n_skipped"),
+        F.round(F.sum("_t").cast("double"), 6).alias("psi"),
+    )
 
 
 def negative_samples(docs: DataFrame, n_negatives: int = 3,

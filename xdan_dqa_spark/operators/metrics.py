@@ -140,6 +140,79 @@ def feature_correlation(df: DataFrame, x_col: str, y_col: str,
     )
 
 
+def fd_violations(df, lhs: str, rhs: str):
+    """Functional-dependency audit: groups of ``lhs`` that map to MORE
+    than one distinct ``rhs`` — the declarative data-quality rule
+    ("one url ⇒ one language", "one order ⇒ one customer") checked as
+    a violation census instead of assumed. Returns one row per
+    violating lhs value: (lhs, n_rows, n_distinct_rhs).
+
+    Shape: ONE hash aggregate on the lhs key with an exact
+    count_distinct — Spark plans multi-distinct via expand, but a
+    single distinct aggregate stays one pass with map-side partial
+    distinct; the violating subset is typically tiny (clean data ⇒
+    empty result), so the output never needs a cap. For the 100 TB
+    version of a high-cardinality rhs, swap count_distinct for two
+    stacked aggregates (groupBy(lhs, rhs) → groupBy(lhs)) — same
+    result, bounded per-group state; that is exactly the shape used
+    here, spelled explicitly so the plan is audit-friendly."""
+    from pyspark.sql import functions as F
+
+    pairs = df.groupBy(F.col(lhs), F.col(rhs)).agg(F.count("*").alias("_c"))
+    per = pairs.groupBy(lhs).agg(
+        F.sum("_c").alias("n_rows"),
+        F.count("*").alias("n_distinct_rhs"),
+    )
+    return per.filter(F.col("n_distinct_rhs") > 1)
+
+
+def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
+    """2-D Pareto frontier (skyline): the rows NOT dominated by any
+    other row, where a dominates b iff x_a >= x_b AND y_a >= y_b with
+    at least one strict — the multi-objective shortlist query
+    ("newest AND highest-value orders", "highest-quality AND longest
+    documents") that a flat ORDER BY cannot express. Returns the
+    dominating rows of ``df`` (all columns preserved).
+
+    Scale shape (the staircase construction, NOT the quadratic
+    NOT-EXISTS self-join): (1) fold to per-distinct-x maxima — ONE
+    map-side-combinable aggregate, output bounded by |distinct x|,
+    which IS the distributed pre-prune (the skyline of per-group
+    maxima equals the skyline of the corpus); (2) a running max of y
+    over x-groups sorted descending — a group survives iff its max-y
+    strictly exceeds every higher-x group's (rows-between frame, O(1)
+    state); (3) survivors join back BROADCAST, keeping rows at their
+    group's max y (same-x lower-y rows are dominated within the
+    group). The single-task window runs over |distinct x| rows; at
+    extreme x-cardinality (x is a raw float score over 10^12 rows),
+    quantize x into fixed-width grid cells first — grid-cell maxima
+    keep the frontier a superset, then re-run exact on the survivor
+    set (documented two-phase refinement; not needed at warehouse key
+    cardinalities).
+
+    Only comparisons and max() touch the values — no arithmetic — so
+    floats/dates/ints are all safe and the result is engine-exact."""
+    g = df.groupBy(F.col(x_col).alias("_x")).agg(
+        F.max(F.col(y_col)).alias("_gy")
+    )
+    w = (
+        Window.orderBy(F.desc("_x"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    kept = (
+        g.withColumn("_prev", F.max("_gy").over(w))
+        .filter(F.col("_prev").isNull() | (F.col("_gy") > F.col("_prev")))
+        .select("_x", "_gy")
+    )
+    return (
+        df.join(
+            F.broadcast(kept),
+            (F.col(x_col) == F.col("_x")) & (F.col(y_col) == F.col("_gy")),
+        )
+        .drop("_x", "_gy")
+    )
+
+
 def mutual_information(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """One-row mutual information (nats) between two categorical
     columns — (n_rows, n_cells, mi_nats). MI(lang; source) near 0 means
@@ -193,14 +266,16 @@ def fd_discovery(df: DataFrame, cols: list[str]) -> DataFrame:
     """Pairwise functional-dependency CENSUS over a column set: for
     every ordered pair (lhs -> rhs), how many lhs values exist, how
     many violate (map to >1 distinct rhs), and whether the FD holds —
-    discovery over all candidate pairs. The schema-inference report a
-    new feed gets before anyone writes constraints by hand.
+    the profiling upgrade of fd_violations (which checks ONE declared
+    FD) to discovery over all candidate pairs. The schema-inference
+    report a new feed gets before anyone writes constraints by hand.
 
-    Scale shape: each pair is two stacked aggregates (groupBy(lhs, rhs)
-    → groupBy(lhs) — per-group state bounded at any rhs cardinality),
-    the per-pair 1-row summaries union into one bounded report.
-    len(cols)² − len(cols) small plans over one cacheable input — run it
-    on a profile sample, not the full corpus (as with any profiler)."""
+    Scale shape: each pair is the same two-stacked-aggregate shape as
+    fd_violations (groupBy(lhs, rhs) → groupBy(lhs) — per-group state
+    bounded at any rhs cardinality), the per-pair 1-row summaries
+    union into one bounded report. len(cols)² − len(cols) small plans
+    over one cacheable input — run it on a profile sample, not the
+    full corpus (as with any profiler)."""
     if len(cols) < 2:
         raise ValueError("need at least two columns")
     outs = []

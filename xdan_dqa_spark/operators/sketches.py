@@ -1,8 +1,7 @@
 """Distributed probabilistic sketches: HyperLogLog cardinality,
-count-min frequency, log-histogram quantiles and theta samples — the
-sublinear-state summaries a 100 TB pipeline runs where exact answers
-would shuffle the corpus (vocabulary size per shard, heavy-hitter terms,
-vocabulary overlap between slices).
+count-min frequency, and Bloom-filter membership — the sublinear-state
+summaries a 100 TB pipeline runs where exact answers would shuffle the
+corpus (vocabulary size per shard, heavy-hitter terms, join pre-filters).
 
 Reference scope: the reference (src/processor.py) has no sketch surface;
 this module is part of the beyond-reference scale layer (SURVEY.md
@@ -24,6 +23,8 @@ divide once at the end.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +39,9 @@ _HLL_RHO_MAX = _HLL_W + 1   # rank when the suffix is all zeros
 # is eps = e/WIDTH of the stream length with prob 1 - e^-D.
 CMS_D = 4
 CMS_WIDTH = 1024
+
+BLOOM_BITS = 1 << 16        # 65 536 positions
+BLOOM_K = 4
 
 
 def _h32(col: F.Column, salt: str | int = "") -> F.Column:
@@ -219,6 +223,97 @@ def cms_heavy_hitters(df: DataFrame, col: str, top_k: int = 20) -> DataFrame:
     )
 
 
+def bloom_positions(col: F.Column) -> F.Column:
+    """Array of the BLOOM_K bit positions a key sets/probes."""
+    return F.array(*[
+        F.pmod(_h32(col.cast("string"), k), F.lit(BLOOM_BITS))
+        for k in range(BLOOM_K)
+    ])
+
+
+def bloom_build(df: DataFrame, col: str) -> DataFrame:
+    """(pos) set-bit table of the Bloom filter over ``df[col]`` — the
+    relational representation of the bitset (<= BLOOM_BITS rows after
+    distinct, independent of input size), which is what a join
+    pre-filter broadcasts."""
+    return (
+        df.select(F.explode(bloom_positions(F.col(col))).alias("pos"))
+        .distinct()
+    )
+
+
+def bloom_probe_report(build_df: DataFrame, build_col: str,
+                       probe_df: DataFrame, probe_col: str,
+                       group_col: str | None = None) -> DataFrame:
+    """Probe every ``probe_df[probe_col]`` key against the Bloom filter
+    built over ``build_df[build_col]`` and report, per ``group_col``
+    (or one global row): (n_probes, n_claimed_present,
+    n_actually_present, n_false_positives, fp_rate).
+
+    A key is CLAIMED present iff all BLOOM_K of its positions are set —
+    computed as an inner join of the probe's exploded positions against
+    the (broadcastable) bit table, counting matches per key; ACTUAL
+    membership is a left-semi mark against the distinct build keys. The
+    filter guarantees no false negatives (claimed >= actual, verified
+    by the report's columns) and the fp_rate column measures the real
+    false-positive rate against the theoretical (1 - e^(-kn/m))^k.
+
+    Scale shape: the bit table and the distinct build-key set are the
+    only non-probe-side state; the bit table is <= 65 536 rows (always
+    broadcastable), so probing N keys is one broadcast join + one
+    bounded aggregate — the exact shape Spark's own runtime bloom-join
+    filter uses, made explicit and oracle-checkable."""
+    bits = bloom_build(build_df, build_col)
+    gcol = F.col(group_col) if group_col else F.lit("all")
+    probes = probe_df.select(
+        gcol.alias("grp"),
+        F.col(probe_col).cast("string").alias("key"),
+    ).distinct()
+    ex = probes.select(
+        "grp", "key", F.explode(bloom_positions(F.col("key"))).alias("pos")
+    )
+    claimed = (
+        ex.join(F.broadcast(bits), "pos")
+        .groupBy("grp", "key")
+        .agg(F.count("*").alias("_hits"))
+        .filter(F.col("_hits") == BLOOM_K)
+        .select("grp", "key", F.lit(True).alias("claimed"))
+    )
+    actual_keys = build_df.select(
+        F.col(build_col).cast("string").alias("key")
+    ).distinct().withColumn("actual", F.lit(True))
+    marked = (
+        probes.join(claimed, ["grp", "key"], "left")
+        .join(actual_keys, "key", "left")
+        .select(
+            "grp",
+            F.coalesce(F.col("claimed"), F.lit(False)).alias("claimed"),
+            F.coalesce(F.col("actual"), F.lit(False)).alias("actual"),
+        )
+    )
+    return marked.groupBy(F.col("grp").alias(group_col or "scope")).agg(
+        F.count("*").alias("n_probes"),
+        F.sum(F.when(F.col("claimed"), 1).otherwise(0)).alias("n_claimed_present"),
+        F.sum(F.when(F.col("actual"), 1).otherwise(0)).alias("n_actually_present"),
+        F.sum(
+            F.when(F.col("claimed") & ~F.col("actual"), 1).otherwise(0)
+        ).alias("n_false_positives"),
+        F.round(
+            F.sum(F.when(F.col("claimed") & ~F.col("actual"), 1).otherwise(0))
+            .cast("double")
+            / F.greatest(
+                F.sum(F.when(~F.col("actual"), 1).otherwise(0)), F.lit(1)
+            ).cast("double"),
+            6,
+        ).alias("fp_rate"),
+    )
+
+
+def bloom_theoretical_fp(n_keys: int) -> float:
+    """Textbook expected false-positive rate for the module geometry."""
+    return (1.0 - math.exp(-BLOOM_K * n_keys / BLOOM_BITS)) ** BLOOM_K
+
+
 def hll_registers_by(df: DataFrame, col: str, by: str) -> DataFrame:
     """(group, idx, rho) GROUPED HyperLogLog registers — one 256-row
     register table per group, the per-slice cardinality monitor
@@ -294,6 +389,190 @@ def hll_estimate_by(df: DataFrame, col: str, by: str) -> DataFrame:
                 / F.col("exact_distinct").cast("double"),
                 6,
             ).alias("rel_error"),
+        )
+    )
+
+
+def cms_join_cardinality(df1: DataFrame, col1: str,
+                         df2: DataFrame, col2: str) -> DataFrame:
+    """Equi-join CARDINALITY estimate from two count-min sketches —
+    (cms_estimate, exact_join_count, overcount). The inner product of
+    two streams' frequency vectors Σ_v f1(v)·f2(v) IS the equi-join
+    output size, and the count-min estimate of it is min over the D
+    rows of the cell-wise product sum (Cormode–Muthukrishnan 2005) —
+    never an underestimate, biased up by hash collisions.
+
+    This is the sketch composition a query planner wants at 100 TB:
+    join size from two 4 096-counter summaries that each side
+    maintains independently (and merges by cell-wise sum), with
+    neither table scanned at planning time. The exact count rides
+    alongside for self-documentation — it is the expensive thing the
+    sketch replaces.
+
+    All-integer: cell counts are exact sums, the product sum is
+    DECIMAL(38,0) (two 10^9-row streams can put ~10^18 in one cell
+    product), min is order-independent — the estimate itself is
+    oracle-exact."""
+    s1 = cms_table(df1, col1)
+    s2 = cms_table(df2, col2)
+    per_row = (
+        s1.join(
+            s2.withColumnRenamed("cnt", "cnt2"), ["row_id", "col_id"]
+        )
+        .groupBy("row_id")
+        .agg(
+            F.sum(
+                F.col("cnt").cast("decimal(19,0)")
+                * F.col("cnt2").cast("decimal(18,0)")
+            ).alias("_ip")
+        )
+    )
+    est = per_row.agg(F.min("_ip").cast("long").alias("cms_estimate"))
+    exact = (
+        df1.select(F.col(col1).cast("string").alias("_k"))
+        .join(df2.select(F.col(col2).cast("string").alias("_k")), "_k")
+        .agg(F.count("*").alias("exact_join_count"))
+    )
+    return est.crossJoin(exact).select(
+        "cms_estimate",
+        "exact_join_count",
+        (F.col("cms_estimate") - F.col("exact_join_count")).alias("overcount"),
+    )
+
+
+def hll_rolling_estimate(df: DataFrame, col: str, ts_col: str,
+                         window_days: int = 7) -> DataFrame:
+    """Rolling ``window_days``-day distinct-cardinality estimate from
+    WINDOWED register merges — (day, hll_estimate): "7-day active
+    users" at sketch cost. The exact rolling distinct needs either a
+    distinct-per-window recount (window_days full scans) or a giant
+    dedup state; the HLL form keeps ONE 256-row register table per day
+    and merges a trailing window of them with max() — the canonical
+    production shape for rolling reach/NDV dashboards.
+
+    Construction: daily registers (day, idx, rho) via one fold, then
+    max(rho) over a ROWS window per idx ordered by day — the per-idx
+    partition holds one row per day, so the window state is bounded by
+    the calendar, never the data. Day indexing is integral
+    (epoch-day), so trailing-N-days is a rows frame on a gap-filled
+    day grid; missing (day, idx) combinations contribute nothing to a
+    max, which is exactly HLL-correct. The finisher is
+    hll_estimate_from_registers' arithmetic applied per day."""
+    # integral epoch-day: DIV, not float-divide-then-floor (the float
+    # path is a different op than DuckDB's BIGINT // and invites ULP
+    # drift at day boundaries)
+    day = F.expr(
+        f"unix_micros(cast({ts_col} as timestamp)) div 86400000000"
+    ).cast("long")
+    c = F.col(col).cast("string")
+    hl = _h32(c, "hl")
+    hh = _h32(c, "hh")
+    idx = hl.bitwiseAND(F.lit(HLL_M - 1))
+    w = F.shiftright(hl, HLL_P) * F.lit(1 << 32).cast("long") + hh
+    rho = F.when(w == 0, F.lit(_HLL_RHO_MAX)).otherwise(
+        F.lit(_HLL_RHO_MAX) - F.length(F.bin(w))
+    )
+    daily = (
+        df.select(day.alias("day"), idx.alias("idx"), rho.alias("rho"))
+        .groupBy("day", "idx")
+        .agg(F.max("rho").alias("rho"))
+    )
+    # gap-fill the day axis per idx so the ROWS frame means calendar
+    # days: build the full (day x idx) grid from the observed day span
+    days = daily.select("day").distinct()
+    span = days.agg(F.min("day").alias("_d0"), F.max("day").alias("_d1"))
+    grid = span.select(
+        F.explode(F.sequence(F.col("_d0"), F.col("_d1"))).alias("day")
+    ).crossJoin(
+        daily.select("idx").distinct()
+    )
+    filled = grid.join(daily, ["day", "idx"], "left")
+    wr = (
+        Window.partitionBy("idx").orderBy("day")
+        .rowsBetween(-(window_days - 1), 0)
+    )
+    rolled = filled.withColumn("mrho", F.max("rho").over(wr)).filter(
+        F.col("mrho").isNotNull()
+    )
+    regs = rolled.select("day", F.col("idx"), F.col("mrho").alias("rho"))
+    contrib = F.expr(
+        f"cast(shiftleft(cast(1 as bigint), cast({_HLL_RHO_MAX} - rho as int)) "
+        "as decimal(38,0))"
+    )
+    s = regs.groupBy("day").agg(
+        F.count("*").alias("n_present"),
+        F.sum(contrib).alias("s_present"),
+    )
+    alpha = 0.7213 / (1.0 + 1.079 / HLL_M)
+    staged = s.select(
+        "day",
+        (F.lit(HLL_M) - F.col("n_present")).alias("_nz"),
+        (
+            F.col("s_present")
+            + (F.lit(HLL_M) - F.col("n_present")).cast("decimal(38,0)")
+            * F.lit(1 << 57).cast("decimal(38,0)")
+        ).alias("_s_total"),
+    )
+    raw = (
+        F.lit(alpha * HLL_M * HLL_M * float(1 << 57))
+        / F.col("_s_total").cast("double")
+    )
+    v = F.col("_nz").cast("double")
+    est = F.when(
+        (raw <= F.lit(2.5 * HLL_M)) & (v > 0),
+        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v),
+    ).otherwise(raw)
+    return staged.select("day", F.round(est, 4).alias("hll_estimate"))
+
+
+def bloom_join_prefilter_report(fact: DataFrame, fact_key: str,
+                                dim: DataFrame, dim_key: str) -> DataFrame:
+    """The Bloom join pre-filter MEASURED end-to-end: build the filter
+    over the (already predicate-pruned) dim keys, pass the fact table
+    through it, and report one row (n_fact_rows, n_pass_bloom,
+    n_true_match, n_false_pass, pruned_frac) — the explicit form of
+    what Spark's runtime row-group/bloom filters do inside an
+    exchange, with the pruning power quantified instead of hidden in
+    metrics. No false negatives: n_pass_bloom >= n_true_match always,
+    and every true match passes.
+
+    Shape: the bitset is the <= 65 536-row broadcast position table;
+    the fact side probes map-side (explode K positions -> broadcast
+    join -> count-K), so the only fact-wide shuffle is the final
+    1-row fold; the true-match count is a broadcast LEFT SEMI against
+    the distinct dim keys."""
+    bits = bloom_build(dim, dim_key)
+    keys = dim.select(F.col(dim_key).cast("string").alias("_k")).distinct()
+    f = fact.select(F.col(fact_key).cast("string").alias("_k"))
+    # probe DISTINCT keys (a key repeated r times in the fact would
+    # otherwise accumulate 4r position hits and fail the == K test)
+    ex = f.distinct().select(
+        "_k", F.explode(bloom_positions(F.col("_k"))).alias("pos")
+    )
+    passed = (
+        ex.join(F.broadcast(bits), "pos")
+        .groupBy("_k")
+        .agg(F.count("*").alias("_hits"))
+        .filter(F.col("_hits") == BLOOM_K)
+        .select("_k")
+    )
+    n_fact = f.agg(F.count("*").alias("n_fact_rows"))
+    n_pass = f.join(passed, "_k", "left_semi").agg(
+        F.count("*").alias("n_pass_bloom")
+    )
+    n_true = f.join(F.broadcast(keys), "_k", "left_semi").agg(
+        F.count("*").alias("n_true_match")
+    )
+    return (
+        n_fact.crossJoin(n_pass).crossJoin(n_true)
+        .select(
+            "n_fact_rows", "n_pass_bloom", "n_true_match",
+            (F.col("n_pass_bloom") - F.col("n_true_match")).alias("n_false_pass"),
+            F.round(
+                (F.col("n_fact_rows") - F.col("n_pass_bloom")).cast("double")
+                / F.col("n_fact_rows").cast("double"),
+                6,
+            ).alias("pruned_frac"),
         )
     )
 
@@ -393,6 +672,52 @@ def log_histogram_quantiles(df: DataFrame, col: str,
     )
 
 
+def hll_set_overlap(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
+    """Distinct-set OVERLAP estimate by HyperLogLog inclusion-exclusion:
+    |A∩B| ~= est(A) + est(B) − est(A∪B), where est(A∪B) comes from the
+    max()-merge of the two register tables — the audience-overlap /
+    recrawl-overlap question answered from three 256-row states without
+    ever joining the raw sets. Returns one row (est_a, est_b,
+    est_union, est_overlap, exact_overlap, rel_error).
+
+    Union-merge exactness is the HLL property (registers of A∪B ==
+    cell-wise max — test-pinned for the shard case); the subtraction
+    amplifies relative error when the overlap is small compared to the
+    sets (standard caveat, visible in the rel_error column rather than
+    hidden). Exact overlap rides alongside via one semi-joined
+    distinct count."""
+    ra = hll_registers(df_a, col)
+    rb = hll_registers(df_b, col)
+    ru = ra.unionByName(rb).groupBy("idx").agg(F.max("rho").alias("rho"))
+    ea = hll_estimate_from_registers(ra).select(
+        F.col("hll_estimate").alias("est_a"))
+    eb = hll_estimate_from_registers(rb).select(
+        F.col("hll_estimate").alias("est_b"))
+    eu = hll_estimate_from_registers(ru).select(
+        F.col("hll_estimate").alias("est_union"))
+    exact = (
+        df_a.select(F.col(col).alias("_k")).distinct()
+        .join(df_b.select(F.col(col).alias("_k")).distinct(), "_k", "left_semi")
+        .agg(F.count("*").alias("exact_overlap"))
+    )
+    return (
+        ea.crossJoin(eb).crossJoin(eu).crossJoin(exact)
+        .select(
+            "est_a", "est_b", "est_union",
+            F.round(
+                F.col("est_a") + F.col("est_b") - F.col("est_union"), 4
+            ).alias("est_overlap"),
+            "exact_overlap",
+            F.round(
+                (F.round(F.col("est_a") + F.col("est_b") - F.col("est_union"), 4)
+                 - F.col("exact_overlap").cast("double"))
+                / F.greatest(F.col("exact_overlap").cast("double"), F.lit(1.0)),
+                6,
+            ).alias("rel_error"),
+        )
+    )
+
+
 # --------------------------------------------------------------- theta
 
 # Theta-sketch sampling rate: keep hashes below 2^32 / 2^THETA_LG — a
@@ -480,7 +805,7 @@ def theta_set_overlap(df_a: DataFrame, df_b: DataFrame, col: str,
                       lg_theta: int = THETA_LG) -> DataFrame:
     """Distinct-set union/intersection/difference estimates from two
     coordinated theta samples — the set-algebra query HLL cannot answer
-    directly (HLL must inclusion-exclude, amplifying error;
+    directly (hll_set_overlap must inclusion-exclude, amplifying error;
     theta INTERSECTS the samples, so A∩B error scales with the overlap
     itself). One row: (est_a, est_b, est_union, est_intersect,
     est_a_only, exact_intersect, rel_error_intersect).
